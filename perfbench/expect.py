@@ -23,7 +23,7 @@ import pandas as pd
 from inputs import CHECKOUT, cache_path
 from measure import cores
 
-MIX_TABLES = ["customer", "orders", "documents", "embeddings"]
+MIX_TABLES = ["orders", "documents", "embeddings"]
 
 # phash -> clamped (lat, lon), the functions.geo rule in SQL
 GEOTAG_SQL = (

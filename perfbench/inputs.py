@@ -10,8 +10,9 @@ never shares the measured session and never counts in ``setup_s``.
   each seed puts the images at other places on the globe.
 - ``customer(n)``: ``c_custkey`` 0..n-1; the boxes come from the
   engine's own ``boxes_from_customer`` derivation.
-- ``mix_tables()``: orders / customer / documents / embeddings for the
-  query mix, in the test-table shapes the registry gates read. Fixed
+- ``mix_tables()``: orders / documents / embeddings for the query mix,
+  generated with the structure measured on the registry's own test
+  tables (see ``perfbench/NOTES.md``, "Query-mix inputs"). Fixed
   content (generator seed ``MIX_DATA_SEED``); the run seed only
   permutes the gate order, so the oracle answers are computed once.
 - ``changeset_xml(n)``: the engine's own ``synthesize_fixture_xml``.
@@ -29,17 +30,24 @@ import pyarrow.parquet as pq
 CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CACHE = os.path.join(CHECKOUT, ".perfbench_cache")
 
-MIX_DATA_SEED = 20240601
+MIX_DATA_SEED = 5
 CAPTION_WORDS = [
     "harbor", "straße", "night", "café", "skyline", "über", "river", "plaza",
     "旧市街", "bridge", "fog", "sunset", "markt", "tower", "schnee", "montañas",
 ]
+# The registry's documents: a 30-word vocabulary drawn uniformly,
+# 10..99 words per text, 5% near copies (another document's text plus
+# " dup"), lang "en" with p 0.4 and the four others 0.15 each, source
+# src0..src9 round robin.
 DOC_WORDS = (
     "batch part spark line column order small sort fast value scan a hash slow "
     "group agg filter query big key window row table stream merge data the "
     "customer join vector"
 ).split()
-LANGS = ["en", "en", "zh", "de", "fr"]
+DOC_WORDS_MIN, DOC_WORDS_MAX = 10, 99
+DOC_DUP_SHARE = 0.05
+LANGS = ["en", "zh", "es", "fr", "de"]
+LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
 EMBED_DIM = 64
 
 
@@ -100,65 +108,60 @@ def images(seed: int, n: int) -> str:
     return path
 
 
-def customer_table(n: int) -> pa.Table:
-    keys = np.arange(n, dtype=np.int64)
-    return pa.table({
-        "c_custkey": keys,
-        "c_name": pa.array([f"Customer#{k:09d}" for k in keys]),
-    })
-
-
 def customer(n: int) -> str:
     """Directory holding ``customer.parquet`` with ``n`` customers."""
     path = cache_path(f"customer_n{n}")
     if not _done(path):
-        _write_parquet(path, {"customer": customer_table(n)}, row_groups=1)
+        keys = np.arange(n, dtype=np.int64)
+        tbl = pa.table({
+            "c_custkey": keys,
+            "c_name": pa.array([f"Customer#{k:09d}" for k in keys]),
+        })
+        _write_parquet(path, {"customer": tbl}, row_groups=1)
     return path
 
 
 def _documents(rng: np.random.Generator, n: int) -> pa.Table:
-    """Random-word documents; one in five is a near copy of an earlier
-    document (one word replaced), so the dedup gates find pairs."""
-    lengths = rng.integers(12, 60, size=n)
-    texts: list[str] = []
-    for i in range(n):
-        if i >= 10 and i % 5 == 0:
-            toks = texts[int(rng.integers(0, i))].split(" ")
-            toks[int(rng.integers(0, len(toks)))] = DOC_WORDS[int(rng.integers(0, len(DOC_WORDS)))]
-        else:
-            toks = [DOC_WORDS[j] for j in rng.integers(0, len(DOC_WORDS), size=lengths[i])]
-        texts.append(" ".join(toks))
+    """Uniform random-word texts; a random ``DOC_DUP_SHARE`` of them are
+    replaced by another document's text plus " dup"."""
+    words = np.array(DOC_WORDS, dtype=object)
+    lengths = rng.integers(DOC_WORDS_MIN, DOC_WORDS_MAX + 1, size=n)
+    texts = [" ".join(words[rng.integers(0, len(words), size=k)]) for k in lengths]
+    n_dup = round(n * DOC_DUP_SHARE)
+    for i in rng.choice(n, size=n_dup, replace=False):
+        src = int(rng.integers(0, n - 1))
+        texts[i] = texts[src + (src >= i)] + " dup"  # any document but i
     return pa.table({
         "doc_id": np.arange(n, dtype=np.int64),
         "text": pa.array(texts),
-        "lang": pa.array([LANGS[i % len(LANGS)] for i in range(n)]),
-        "source": pa.array([f"src{i % 7}" for i in range(n)]),
+        "lang": pa.array(rng.choice(LANGS, size=n, p=LANG_P)),
+        "source": pa.array([f"src{i % 10}" for i in range(n)]),
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     })
 
 
 def _embeddings(rng: np.random.Generator, n: int) -> pa.Table:
-    vecs = rng.standard_normal((n, EMBED_DIM)).astype(np.float32)
+    """Unit-norm isotropic Gaussian vectors with a uniform label in
+    0..9, which carries no cluster structure (as in the registry)."""
+    vecs = rng.standard_normal((n, EMBED_DIM))
+    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
     return pa.table({
         "vec_id": np.arange(n, dtype=np.int64),
         "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
-        "label": (np.arange(n) % 10).astype(np.int32),
+        "label": rng.integers(0, 10, size=n).astype(np.int32),
     })
 
 
-def mix_tables(n_orders: int, n_customers: int, n_docs: int, n_vecs: int) -> str:
-    """Directory of the query-mix tables (an ``sf_dir`` for the gates)."""
-    path = cache_path(f"mix_o{n_orders}_c{n_customers}_d{n_docs}_v{n_vecs}")
+def mix_tables(n_orders: int, n_docs: int, n_vecs: int) -> str:
+    """Directory of the query-mix tables (an ``sf_dir`` for the gates).
+    The gates read only ``o_orderkey`` of orders: 0..n-1, as in the
+    registry."""
+    path = cache_path(f"mix_o{n_orders}_d{n_docs}_v{n_vecs}")
     if not _done(path):
         rng = np.random.default_rng(MIX_DATA_SEED)
-        okeys = np.arange(n_orders, dtype=np.int64)
-        orders = pa.table({
-            "o_orderkey": okeys,
-            "o_custkey": rng.integers(0, n_customers, size=n_orders),
-        })
+        orders = pa.table({"o_orderkey": np.arange(n_orders, dtype=np.int64)})
         _write_parquet(path, {
             "orders": orders,
-            "customer": customer_table(n_customers),
             "documents": _documents(rng, n_docs),
             "embeddings": _embeddings(rng, n_vecs),
         }, row_groups=1)

@@ -41,10 +41,10 @@ def run(name: str, seed: int, seconds: float, trace: bool) -> dict:
     session_s = time.perf_counter() - t0
     try:
         warm = wl.warm(spark)
-        wl.settle(spark)
         setup_s = time.perf_counter() - t0
         attempted, failed = wl.check(warm)
         M.log(f"session {session_s:.2f}s, set-up {setup_s:.2f}s, check {failed}/{attempted} wrong")
+        wl.settle(spark)
         if trace:
             values = wl.trace(spark)
             values["session.build_s"] = session_s

@@ -80,9 +80,9 @@ def wrong_answer_checks(spark, tile, mix, repl) -> None:
     bad = dict(got, **{g: got[g].iloc[1:]})
     expect(mix.check(bad)[1] == 1, f"query_mix: a missing {g} row is a failure")
 
-    cycle = repl.warm(spark)
-    expect(repl.check(cycle)[1] == 0, "replication: the correct state passes")
-    other = dict(cycle, seq=cycle["seq"] + 1)
+    replay = repl.warm(spark)
+    expect(repl.check(replay)[1] == 0, "replication: the correct state passes")
+    other = dict(replay, seqs=[s + 1 for s in replay["seqs"]])
     expect(repl.check(other)[1] == 1, "replication: the state of another sequence is a failure")
 
 

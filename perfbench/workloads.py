@@ -2,14 +2,14 @@
 
 1. ``prepare``: generate the seeded inputs and the expected answers
    (cached in the checkout, never timed);
-2. set-up (``setup_s``): build the session, run one warm pass whose
-   output is checked against the expected answers, then ``settle``
-   with untimed passes of the timed path;
-3. ``timed``: fresh DataFrames every operation, each materialized
-   through a noop sink (or, for replication, written to fresh
-   stores), until ``seconds`` have passed;
-4. ``trace`` (``--trace 1``): untraced and traced operations,
-   interleaved, plus the per-layer instruments.
+2. set-up (``setup_s``): build the session and run one warm pass,
+   whose output is then checked against the expected answers;
+3. ``settle``: untimed passes of the timed path, outside ``setup_s``;
+4. ``timed``: fresh DataFrames every operation, each materialized
+   through a noop sink, until ``seconds`` have passed (replication:
+   a fixed replay into fresh stores);
+5. ``trace`` (``--trace 1``): untraced and traced operations, plus
+   the per-layer instruments.
 
 A wrong answer or an exception counts as a failed operation.
 """
@@ -130,7 +130,7 @@ def tile_pipeline(spark, images_dir: str, customer_dir: str, upto: str = "rollup
 
 class TilePipeline(PassWorkload):
     name = "tile_pipeline"
-    warm_passes = 2
+    warm_passes = 3
 
     def prepare(self, seed: int) -> None:
         self.images = inputs.images(seed, TILE_IMAGES)
@@ -159,12 +159,12 @@ class TilePipeline(PassWorkload):
             t = time.perf_counter()
             df = self.build(spark)
             with M.StageWindow(spark) as win:
-                M.materialize(df)
+                rows = df.collect()  # one row per box: collecting it is cheap
             nodes = M.plan_nodes(df)
             traced.append(time.perf_counter() - t)
+        matches = sum(r["n_images"] for r in rows)  # the join's output, as the rollup counted it
         joins = [m.get("numOutputRows", 0) for n, m in nodes if "Join" in n]
         bcast = [m for n, m in nodes if n == "BroadcastExchange"]
-        matches = int(self.expected["n_images"].sum())
         candidates = max(joins)
         prefix = {s: M.median([M.timed(M.noop, tile_pipeline(spark, self.images, self.customer, s))[0]
                                for _ in range(2)])
@@ -193,7 +193,8 @@ class TilePipeline(PassWorkload):
 # query_mix
 # ---------------------------------------------------------------------------
 
-MIX_SIZES = dict(n_orders=12_000, n_customers=15_000, n_docs=800, n_vecs=800)
+# the registry's sf0.01 table sizes
+MIX_SIZES = dict(n_orders=15_000, n_docs=500, n_vecs=500)
 # gate -> (engine module it exercises, tables it reads)
 MIX_GATES = {
     "minhash_lsh": ("dedup", ["documents"]),
@@ -277,14 +278,28 @@ class QueryMix(PassWorkload):
 REPL_CHANGESETS = 10_000
 REPL_COMMENTS_EVERY = 25  # synthesize_fixture_xml's default
 REPL_BATCH = 2_000
+REPL_LOADS = 6  # timed bulk loads per run, each into fresh stores
+# Sequences per timed replay. Each sequence adds a keyed delta to both
+# stores, and every comments delete_keys resolves the whole log, so the
+# per-sequence cost grows with the replay (on the 4-core host about 2 s
+# for the first sequence, 3 s for the fourth, 8-9 s for the fifteenth).
+REPL_SEQS = 4
+# Sequences of the traced replay. The changeset store holds the load's
+# merge plus one merge per sequence, so SnapStore's default
+# auto_compact_every (16) compacts it at the 15th sequence; the comments
+# store stays one delta short of its own compaction, so the read after
+# the replay resolves a fresh compact on one store and a 31-snapshot
+# merge-on-read log on the other.
+TRACE_SEQS = 15
 REPL_STORE_CALLS = ["merge", "delete_keys", "append", "compact"]
 
 
 class Replication:
-    """One cycle: fresh stores, an XML bulk load, then one
-    ``replicate()`` call for one new head. Every cycle starts from
-    fresh stores, so every sample resolves the same deltas; the timed
-    loop repeats cycles until ``seconds`` have passed."""
+    """A bulk load into fresh stores, then a replay of new sequences,
+    one ``replicate()`` call per new head. Every replay starts from
+    fresh stores, so every run does the same work. The timed work is
+    fixed (``REPL_LOADS`` loads and one ``REPL_SEQS``-sequence replay),
+    whatever ``seconds`` is."""
 
     name = "replication"
 
@@ -319,6 +334,11 @@ class Replication:
         store.merge(xi.parse_changesets(raw), source=self.xml)
         comments.append(xi.parse_comments(raw), source=self.xml)
 
+    def loaded(self, spark) -> tuple[float, object, object]:
+        """(bulk-load wall time, store, comments store), on fresh stores."""
+        store, comments = self.open_stores(spark)
+        return M.timed(self.load, spark, store, comments)[0], store, comments
+
     def replicate_next(self, spark, store, comments) -> int:
         from changesetmd_spark.sources.replication import SyntheticReplicationSource, replicate
 
@@ -331,28 +351,29 @@ class Replication:
             raise RuntimeError(f"replicate applied {out['applied']} sequences, expected 1")
         return seq
 
-    def cycle(self, spark, spans: M.Spans | None = None) -> dict:
-        store, comments = self.open_stores(spark)
-        load_s = M.timed(self.load, spark, store, comments)[0]
+    def replay(self, spark, store, comments, n_seqs: int, spans: M.Spans | None = None) -> dict:
         if spans is not None:  # after the load: spans see replicate() only
             spans.wrap(store, REPL_STORE_CALLS, "changesets.")
             spans.wrap(comments, REPL_STORE_CALLS, "comments.")
-        seq_s, seq = M.timed(self.replicate_next, spark, store, comments)
-        return {"store": store, "comments": comments, "load_s": load_s,
-                "seq_s": seq_s, "seq": seq}
+        seq_s, seqs = [], []
+        for _ in range(n_seqs):
+            t, seq = M.timed(self.replicate_next, spark, store, comments)
+            seq_s.append(t)
+            seqs.append(seq)
+        return {"store": store, "comments": comments, "seqs": seqs, "seq_s": seq_s}
 
     @staticmethod
     def read_counts(store, comments) -> tuple[int, int]:
         return store.read().count(), comments.read().count()
 
-    def wrong(self, c: dict) -> int:
-        """1 if a cycle's stores differ from the replay of its input."""
+    def wrong(self, r: dict) -> int:
+        """1 if the stores differ from the replay of their input."""
         from pyspark.sql import functions as F
 
-        want = expect.replication_state(REPL_CHANGESETS, REPL_COMMENTS_EVERY, [c["seq"]], REPL_BATCH)
+        want = expect.replication_state(REPL_CHANGESETS, REPL_COMMENTS_EVERY, r["seqs"], REPL_BATCH)
         if want["initial"] != self.truth:
             raise RuntimeError(f"fixture replay {want['initial']} != generator truth {self.truth}")
-        row = c["store"].read().agg(
+        row = r["store"].read().agg(
             F.count("*").alias("n"),
             F.countDistinct("id").alias("ids"),
             F.sum("num_changes").alias("nc"),
@@ -364,52 +385,57 @@ class Replication:
             "num_changes_sum": row["nc"],
             "tags": row["tags"],
             "no_geo": row["no_geo"],
-            "comments": c["comments"].read().count(),
+            "comments": r["comments"].read().count(),
         }
         return int(row["ids"] != row["n"] or any(got[k] != want[k] for k in got))
 
     def warm(self, spark) -> dict:
-        return self.cycle(spark)
+        _, store, comments = self.loaded(spark)
+        return self.replay(spark, store, comments, 1)
 
     def settle(self, spark) -> None:
-        self.cycle(spark)
+        self.warm(spark)
 
-    def check(self, c: dict) -> tuple[int, int]:
-        return 2, self.wrong(c)  # the load and the sequence
+    def check(self, r: dict) -> tuple[int, int]:
+        return 2, self.wrong(r)  # the load and the sequence
 
     def timed(self, spark, seconds: float) -> dict:
-        cycles = []
-        start = time.perf_counter()
-        while len(cycles) < MIN_SAMPLES or time.perf_counter() - start < seconds:
-            cycles.append(self.cycle(spark))
-        load_s = [c["load_s"] for c in cycles]
-        seq_s = [c["seq_s"] for c in cycles]
-        log(f"loads {[round(t, 3) for t in load_s]}, sequences {[round(t, 3) for t in seq_s]}")
-        return {"ops": 2 * len(cycles), "failed": self.wrong(cycles[-1]),
-                "pass_s": M.median(seq_s), "rows_per_s": REPL_CHANGESETS / M.median(load_s)}
+        loads = [self.loaded(spark) for _ in range(REPL_LOADS)]
+        load_s = [t for t, _, _ in loads]
+        r = self.replay(spark, *loads[-1][1:], REPL_SEQS)
+        log(f"loads {[round(t, 3) for t in load_s]}, sequences {[round(t, 3) for t in r['seq_s']]}")
+        # a wrong final state fails the load under it and every sequence
+        return {"ops": REPL_LOADS + REPL_SEQS, "failed": (1 + REPL_SEQS) * self.wrong(r),
+                "pass_s": sum(r["seq_s"]) / REPL_SEQS,
+                "rows_per_s": REPL_CHANGESETS / M.median(load_s)}
 
     def trace(self, spark) -> dict:
-        """Per-layer split of the write and read paths: the store
-        methods are wrapped on the instances, from outside."""
-        before = self.cycle(spark)
+        """Per-layer split of the write and read paths over a
+        ``TRACE_SEQS``-sequence replay, per sequence: the store methods
+        are wrapped on the instances, from outside. The tracing overhead
+        compares its first ``REPL_SEQS`` sequences with an untraced
+        replay of as many."""
+        load_a, store, comments = self.loaded(spark)
+        plain = self.replay(spark, store, comments, REPL_SEQS)
+        load_b, store, comments = self.loaded(spark)
         spans = M.Spans()
-        c = self.cycle(spark, spans)
-        after = self.cycle(spark)
-        store, comments = c["store"], c["comments"]
-
-        def both(table: dict, op: str) -> float:
-            return table[f"changesets.{op}"] + table[f"comments.{op}"]
-
+        r = self.replay(spark, store, comments, TRACE_SEQS, spans)
         read_s, rows = M.timed(self.read_counts, store, comments)
+        replay_s = sum(r["seq_s"])
+
+        def per_seq(op: str) -> float:
+            return (spans.self_s[f"changesets.{op}"] + spans.self_s[f"comments.{op}"]) / TRACE_SEQS
+
         return {
-            "trace.overhead_s": c["seq_s"] - (before["seq_s"] + after["seq_s"]) / 2,
-            "sources.xml_ingest.load_s": c["load_s"],
-            "sources.snapstore.merge_s": both(spans.self_s, "merge"),
-            "sources.snapstore.delete_keys_s": both(spans.self_s, "delete_keys"),
-            "sources.snapstore.append_s": both(spans.self_s, "append"),
-            "sources.snapstore.compact_s": both(spans.self_s, "compact"),
-            "sources.snapstore.compact_count": both(spans.calls, "compact"),
-            "sources.replication.loop_s": c["seq_s"] - spans.total_self(),
+            "trace.overhead_s": (sum(r["seq_s"][:REPL_SEQS]) - sum(plain["seq_s"])) / REPL_SEQS,
+            "sources.xml_ingest.load_s": M.median([load_a, load_b]),
+            "sources.snapstore.merge_s": per_seq("merge"),
+            "sources.snapstore.delete_keys_s": per_seq("delete_keys"),
+            "sources.snapstore.append_s": per_seq("append"),
+            "sources.snapstore.compact_s": per_seq("compact"),
+            "sources.snapstore.compact_count":
+                spans.calls["changesets.compact"] + spans.calls["comments.compact"],
+            "sources.replication.loop_s": (replay_s - spans.total_self()) / TRACE_SEQS,
             "sources.snapstore.read_s": read_s,
             "sources.snapstore.deltas_resolved": live_deltas(store) + live_deltas(comments),
             "sources.snapstore.bytes_per_row": data_bytes(os.path.dirname(store.root)) / sum(rows),
