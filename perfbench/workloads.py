@@ -288,7 +288,7 @@ REPL_SEQS = 4
 # merge plus one merge per sequence, so SnapStore's default
 # auto_compact_every (16) compacts it at the 15th sequence; the comments
 # store stays one delta short of its own compaction, so the read after
-# the replay resolves a fresh compact on one store and a 31-snapshot
+# the replay resolves a fresh compact on one store and a 32-snapshot
 # merge-on-read log on the other.
 TRACE_SEQS = 15
 REPL_STORE_CALLS = ["merge", "delete_keys", "append", "compact"]
