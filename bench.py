@@ -12,7 +12,8 @@ Also times the headline gated queries at $SPARK_GRAFT_SF_DIR (default
 Prints ONE JSON line:
   {"metric": ..., "value": <headline pipeline sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,
-   "images_per_sec": ..., "n_images": ..., "cpus": ...}
+   "images_per_sec": ..., "n_images": ..., "cpus": ...,
+   "lsh_candidates": {...per LSH gate, rows out of its bucket self-join...}}
 
 Scaling evidence (local[8] vs local[32]) is produced by
 tools/run_scaling.py which invokes this file twice.
@@ -33,6 +34,7 @@ from changesetmd_spark import entry_queries as EQ  # noqa: E402
 from changesetmd_spark import synth  # noqa: E402
 from changesetmd_spark.functions import geo, s2  # noqa: E402
 from changesetmd_spark.operators import spatial_join as sj  # noqa: E402
+from changesetmd_spark.profile import lsh_candidates  # noqa: E402
 from changesetmd_spark.session import get_spark  # noqa: E402
 
 IMAGES_PER_ORDER = 40  # bench images table = 40× orders rows (6M @ sf0.1)
@@ -172,11 +174,9 @@ def main() -> None:
         timings = {"spatial_pipeline": round(headline_sec, 3)}
 
     queries = EQ.QUERIES
-    # LSH families with candidate-count telemetry (VERDICT r4 item 5):
-    # the bench wires a CandidateTelemetry through the module hook so
-    # every banded-LSH gate's candidate-pair count — the n²/2^bits
-    # term that decides 10⁹-row feasibility — lands in the bench JSON.
-    TELEMETERED = {"phash_neardup", "minhash_lsh", "simhash", "embed_neardup"}
+    # banded-LSH gates: rows out of each one's bucket self-join are read
+    # from the timed run's own executed plan
+    LSH_GATES = {"phash_neardup", "minhash_lsh", "simhash", "embed_neardup"}
     candidates: dict[str, int] = {}
     if not headline_only:
         # query-subset mode (per-query scaling ladder): no headline
@@ -188,26 +188,14 @@ def main() -> None:
         for _ in range(passes):
             for name in bench_queries:
                 t0 = time.time()
-                df = queries[name](spark, sf_dir)
-                n = df.count()
+                # exactly the plan df.count() runs, kept as a DataFrame
+                # so its executed plan can be read after the action
+                agg = queries[name](spark, sf_dir).groupBy().count()
+                agg.collect()
                 dt = round(time.time() - t0, 3)
                 timings[name] = min(timings.get(name, dt), dt)
-        # candidate counts come from a SEPARATE untimed pass: the
-        # CollectMetrics node sits on the (pre-refine) candidate
-        # relation, where it breaks the codegen span and measurably
-        # costs ~1s on the widest family — so the timed numbers above
-        # stay comparable across rounds, and the counts below are
-        # exact for the same inputs
-        from changesetmd_spark.telemetry import CandidateTelemetry
-
-        for name in sorted(TELEMETERED & set(bench_queries)):
-            tel = EQ.ACTIVE_TELEMETRY = CandidateTelemetry()
-            try:
-                queries[name](spark, sf_dir).count()
-            finally:
-                EQ.ACTIVE_TELEMETRY = None
-            for fam, cnt in tel.counts().items():
-                candidates[name if fam in name else f"{name}:{fam}"] = cnt
+                if name in LSH_GATES:
+                    candidates[name] = lsh_candidates(agg)
 
     result = {
         "metric": "spatial_join_tile_assign_pipeline",
@@ -219,9 +207,8 @@ def main() -> None:
         "n_images": n_img,
         "matched_boxes": n_rows,
         "cpus": int(cpus),
-        # candidate-pair counts observed inside the LSH gates (exact,
-        # via DataFrame.observe — no extra jobs); the scale-governing
-        # number for every banded-LSH family
+        # rows out of each LSH gate's bucket self-join in the timed run
+        # (profile.lsh_candidates)
         "lsh_candidates": candidates,
     }
     print(json.dumps(result))

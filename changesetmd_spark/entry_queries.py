@@ -371,14 +371,6 @@ def q_tile_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("a_box_id").alias("cust_box"), F.col("b_box_id").alias("supp_box"))
 
 
-# Optional LSH-candidate telemetry threaded into the banded-LSH gates.
-# The driver contract pins gate signatures to (spark, sf_dir), so the
-# bench sets this module hook (a telemetry.CandidateTelemetry) before
-# invoking a gate and reads the observed candidate-pair counts after
-# the gate's action completes — zero extra jobs (DataFrame.observe).
-ACTIVE_TELEMETRY = None
-
-
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image dedup gate: clusters of 5 images share a group
     phash with ONE deterministically flipped bit each (pairwise hamming
@@ -395,7 +387,7 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mask = F.pow(F.lit(2.0), F.pmod(k, 59)).cast("long")
     imgs = orders.select(k.alias("img_key"), base.bitwiseXOR(mask).alias("phash"))
-    return dedup_ops.phash_neardup_pairs(imgs, id_col="img_key", telemetry=ACTIVE_TELEMETRY)
+    return dedup_ops.phash_neardup_pairs(imgs, id_col="img_key")
 
 
 _PHASH_GATE_EXPR = (
@@ -417,10 +409,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pipeline (bands → candidates → exact refine)."""
-    return dedup_ops.minhash_lsh_pairs(
-        plan_strategy.widen_if_narrow(load(spark, sf_dir, "documents")),
-        telemetry=ACTIVE_TELEMETRY,
-    )
+    return dedup_ops.minhash_lsh_pairs(plan_strategy.widen_if_narrow(load(spark, sf_dir, "documents")))
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,7 +418,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     BENCH/BASELINE.md) — the 64-vote aggregate is shuffle-bound, so
     the widening repartition costs more than the parallel scan buys
     (2.85s narrow vs 3.05s widened)."""
-    return dedup_ops.simhash_pairs(load(spark, sf_dir, "documents"), telemetry=ACTIVE_TELEMETRY)
+    return dedup_ops.simhash_pairs(load(spark, sf_dir, "documents"))
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -610,10 +599,7 @@ _AUG_EMBED_SQL = """(
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs over the augmented table —
     PAIR-layout LSH self-join + exact quantized-cosine refine."""
-    return sim_ops.embed_neardup_pairs(
-        _augmented_embeddings(spark, sf_dir), threshold_q=990_000,
-        telemetry=ACTIVE_TELEMETRY,
-    )
+    return sim_ops.embed_neardup_pairs(_augmented_embeddings(spark, sf_dir), threshold_q=990_000)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

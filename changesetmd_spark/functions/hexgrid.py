@@ -107,7 +107,16 @@ def hex_cell(lat: Column, lon: Column, res: int) -> Column:
     SECOND time per row just to check a condition that is always true
     (r6 plan audit: the flagship gate's scan-side Filter inlined the
     packed-cell expression ~20×). With a non-nullable key no null
-    filter is generated at all; the value is unchanged."""
+    filter is generated at all; the value is unchanged.
+
+    Null contract: a null ``lon`` gives cell 0, and 0 never equals a
+    real cell, so the point meets no cover. In the lon/lat domain
+    |q|, |r| < 2^26 at every res ≤ MAX_RES, so ``pack_cell`` gives
+    ≥ res·2^56 + 2^54: at least 2^56 for res ≥ 1, and above 0 at res 0.
+    A null ``lat`` does NOT give 0: ``least``/``greatest`` skip nulls,
+    so the clamp turns it into 90 and the point gets the real cell at
+    (90, lon). The spatial joins still drop it, because their refine
+    tests the raw null lat."""
     q, r = _axial_frac(lat, lon, res)
     qi, ri = _cube_round(q, r)
     return F.coalesce(pack_cell(res, qi, ri), F.lit(0).cast("long"))

@@ -267,7 +267,6 @@ def minhash_lsh_pairs(
     threshold_q: int = JACCARD_T_Q,
     id_col: str = "doc_id",
     text_col: str = "text",
-    telemetry=None,
 ) -> DataFrame:
     """MinHash-LSH near-dup detection: candidates = pairs sharing any
     LSH band signature; refine = exact shingle Jaccard ≥ τ on the
@@ -297,8 +296,6 @@ def minhash_lsh_pairs(
         .select(F.col("ba.id").alias("doc_a"), F.col("bb.id").alias("doc_b"))
         .distinct()
     )
-    if telemetry is not None:
-        cands = telemetry.observe(cands, "minhash")
     a = sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("_bid"), F.col("sh").alias("sh_b"))
     common = (
@@ -521,8 +518,6 @@ def _banded_hamming_pairs(
     max_hamming: int,
     a_name: str,
     b_name: str,
-    telemetry=None,
-    family: str = "banded_hamming",
 ) -> DataFrame:
     """Shared band-LSH hamming machinery (SimHash over text, phash over
     images — any int64 signature family): explode each (id, sig) into
@@ -545,19 +540,9 @@ def _banded_hamming_pairs(
         F.col("b.sig").alias("sig_b"),
     )
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    if telemetry is not None:
-        # telemetry path (untimed bench pass): keep the r5 shape —
-        # distinct FIRST, so the observed number stays the canonical
-        # "distinct candidate pairs entering the refine" (the n²/2^bits
-        # collision-tail gauge, comparable across rounds); zero extra
-        # jobs (telemetry.CandidateTelemetry)
-        cands = telemetry.observe(matches.distinct(), family)
-        return cands.select(
-            a_name, b_name, ham.cast("long").alias("hamming")
-        ).filter(F.col("hamming") <= max_hamming)
-    # hot path (r6): refine BEFORE the dedup shuffle. The hamming test
-    # is a per-row codegen filter, so running it on the raw banded
-    # matches costs nothing extra — while distinct-first shuffled every
+    # refine BEFORE the dedup shuffle (r6). The hamming test is a
+    # per-row codegen filter, so running it on the raw banded matches
+    # costs nothing extra — while distinct-first shuffled every
     # spurious band collision (1.96M candidate rows for simhash at
     # bench scale) just to discard them a node later. Filter-then-
     # distinct is row-for-row identical output (the filter is
@@ -596,7 +581,6 @@ def simhash_pairs(
     max_hamming: int = SH_MAX_HAMMING,
     id_col: str = "doc_id",
     text_col: str = "text",
-    telemetry=None,
 ) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance ≤ d — the shared
     band-LSH machinery over the 64-bit text signatures. Returns
@@ -604,10 +588,7 @@ def simhash_pairs(
     # NOT checkpointed: measured slower than recompute here — the two
     # consumers pipeline into one codegen stage each (see module notes)
     sigs = simhash_sigs(docs, id_col, text_col)
-    return _banded_hamming_pairs(
-        sigs, SH_BANDS, SH_BAND_BITS, max_hamming, "doc_a", "doc_b",
-        telemetry=telemetry, family="simhash",
-    )
+    return _banded_hamming_pairs(sigs, SH_BANDS, SH_BAND_BITS, max_hamming, "doc_a", "doc_b")
 
 
 def SIMHASH_PAIRS_SQL(
@@ -637,7 +618,6 @@ def phash_neardup_pairs(
     max_hamming: int = PH_MAX_HAMMING,
     id_col: str = "image_id",
     phash_col: str = "phash",
-    telemetry=None,
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual-hash hamming distance —
     the shared band-LSH machinery over the 64-bit phash (16-bit bands
@@ -645,10 +625,7 @@ def phash_neardup_pairs(
     sibling of SimHash (task brief's image-dedup family). Returns
     (img_a, img_b, hamming)."""
     sigs = images.select(F.col(id_col).alias("id"), F.col(phash_col).alias("sig"))
-    return _banded_hamming_pairs(
-        sigs, PH_BANDS, PH_BAND_BITS, max_hamming, "img_a", "img_b",
-        telemetry=telemetry, family="phash",
-    )
+    return _banded_hamming_pairs(sigs, PH_BANDS, PH_BAND_BITS, max_hamming, "img_a", "img_b")
 
 
 def PHASH_NEARDUP_SQL(

@@ -104,6 +104,8 @@ def polygon_contains_join(
         F.explode(hexgrid.hex_cell_cover(b_min_lat, b_max_lat, b_min_lon, b_max_lon, res)),
     )
     if compact_build:
+        if broadcast_polygons is False:
+            raise ValueError("compact_build is a broadcast-path optimization")
         if "poly_id" not in polygons.columns:
             raise ValueError("compact_build requires a poly_id key column")
         cand = pts.join(F.broadcast(cov.select("poly_id", "hex_cell")), "hex_cell")

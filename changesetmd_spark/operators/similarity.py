@@ -734,7 +734,6 @@ def embed_neardup_pairs(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    telemetry=None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (task brief dedup family):
     LSH-table candidates (pairs sharing ≥1 table bucket — near-parallel
@@ -772,8 +771,6 @@ def embed_neardup_pairs(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    if telemetry is not None:
-        cand = telemetry.observe(cand, "embed")
     sim = cos_q(dot_int(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
     return (
         cand.select("vec_a", "vec_b", sim.alias("cos_sim_q"))

@@ -56,7 +56,14 @@ def token_hash(tok: Column) -> Column:
     tokens every caller feeds it): as an equi-join key — the shingle
     inverted-index self-joins — a nullable hash makes Catalyst push an
     isnotnull(<md5 expression>) filter into the scan stage, computing
-    the md5 an extra time per shingle (r6 plan audit)."""
+    the md5 an extra time per shingle (r6 plan audit).
+
+    Null contract: a null token hashes to 0. Unlike a hex cell, 0 is
+    also a real hash (any token whose md5 starts with eight zeros), so
+    callers must never feed a null. None does: every caller hashes
+    elements of ``tokens()``, ``bpe_tokens()`` or shingles built from
+    them, and neither a split nor a regex match list has a null element
+    (a null text gives a null array, which yields no tokens)."""
     return F.coalesce(
         F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long"),
         F.lit(0).cast("long"),
@@ -71,7 +78,7 @@ def token_hash_hi(tok: Column) -> Column:
     """Second independent 32-bit token hash (md5 hex chars 9-16) —
     paired with token_hash to give 64 independent bits per token for
     the 64-bit SimHash family. Non-nullable for the same join-key
-    reason as token_hash."""
+    reason as token_hash, with the same null → 0 contract."""
     return F.coalesce(
         F.conv(F.substring(F.md5(tok), 9, 8), 16, 10).cast("long"),
         F.lit(0).cast("long"),

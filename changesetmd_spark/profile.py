@@ -1,0 +1,81 @@
+"""Counts read from the executed plan of a Dataset that has already run.
+
+Spark keeps every physical operator's SQL metrics on the plan that
+executed, so a count can be read after the action with no extra job
+and no change to the plan that ran. The metrics belong to the Dataset
+whose action ran: ``df.count()`` builds and runs a new Dataset, so a
+caller that wants ``count()``'s plan and its metrics runs
+``agg = df.groupBy().count(); agg.collect()`` (the plan ``count()``
+builds) and reads ``agg``.
+
+Usage::
+
+    agg = simhash_pairs(docs).groupBy().count()
+    n_pairs = agg.collect()[0][0]
+    n_candidates = lsh_candidates(agg)
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+
+# leading join key of the banded-LSH bucket self-joins: ``band`` from
+# dedup.band_keys / dedup.minhash_bands, ``bucket`` from
+# similarity.lsh_table_keys
+_LSH_KEYS = frozenset({"band", "bucket"})
+_JOINS = frozenset({"SortMergeJoinExec", "BroadcastHashJoinExec", "ShuffledHashJoinExec"})
+
+
+def executed_nodes(df: DataFrame):
+    """Yield every operator of ``df``'s executed plan, descending into
+    adaptive query stages. A reused exchange is skipped: its operators
+    ran once, under the exchange it reuses. Raises if the adaptive plan
+    is not final, i.e. ``df`` itself never ran an action (every metric
+    would read 0)."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "ReusedExchangeExec":
+            continue
+        if name == "AdaptiveSparkPlanExec":
+            if not node.isFinalPlan():
+                raise RuntimeError(
+                    "adaptive plan is not final: run the action on this "
+                    "DataFrame (e.g. df.groupBy().count().collect()), not on a new one"
+                )
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        yield node
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
+def _leading_key(join) -> str | None:
+    key = join.leftKeys().head()
+    if key.getClass().getSimpleName() != "AttributeReference":
+        return None
+    return key.name()
+
+
+def lsh_candidates(df: DataFrame) -> int:
+    """Rows out of the banded-LSH bucket self-join in ``df``'s executed
+    plan, before any distinct. The join is the one whose leading key is
+    ``band`` or ``bucket``; raises unless there is exactly one.
+
+    The count is taken after the residual condition Catalyst puts in
+    the join. For MinHash and embedding LSH that is only the id order
+    a < b, so every bucket collision counts: Σ C(n, 2) over the
+    buckets. For the hamming families (SimHash, phash) the optimizer
+    also moves the hamming refine into the join, so the count is the
+    band matches within the bound; random collisions do not show."""
+    joins = [
+        n for n in executed_nodes(df)
+        if n.getClass().getSimpleName() in _JOINS and _leading_key(n) in _LSH_KEYS
+    ]
+    if len(joins) != 1:
+        raise ValueError(f"expected one band/bucket join in the executed plan, found {len(joins)}")
+    return int(joins[0].metrics().apply("numOutputRows").value())

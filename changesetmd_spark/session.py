@@ -79,8 +79,9 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # warmup=False for sessions that never run the analytical DAGs
-    # (e.g. the ingest/replication CLI): the ~5 s one-time warm only
-    # pays back where broadcast-join/window/NLJ plans will run
+    # (e.g. the ingest/replication CLI): the one-time warm costs ~36 s
+    # on a 4-core host and only pays back where broadcast-join/window/
+    # NLJ plans will run
     if warmup:
         _warm_codegen(spark)
     return spark
@@ -97,12 +98,13 @@ def _warm_codegen(spark: SparkSession) -> None:
     operator classes) — measured 39 s for a cold JVM's first broadcast
     spatial join and ~2-3 s extra on the first kNN, whose DAG is the
     registry's widest (broadcast join + explode + two window specs +
-    hash agg). Running ONE tiny (≈2k row, in-memory range) plan that
-    exercises exactly those operator shapes at session build time
-    moves that cost out of every first real query — the standard
+    hash agg). Running miniature in-memory plans of those operator
+    shapes at session build time (the warm blocks below) moves that
+    cost out of every first real query — the standard
     session-warmup pattern on production clusters, where a session
-    serves many queries and first-latency matters. Cost: well under a
-    second, paid once, outside any query's timing."""
+    serves many queries and first-latency matters. Cost: 36-37 s on a
+    4-core host (local[4]), paid once per session, outside any query's
+    timing but inside every caller's wall time."""
     key = spark.sparkContext.applicationId
     if key in _WARMED:
         return

@@ -604,29 +604,6 @@ class SnapStore:
             rows, "snapshot_id long, partition_id int, rows long"
         )
 
-    # -- operational metrics sidecar (e.g. LSH candidate telemetry) ----
-
-    def log_metric(self, kind: str, name: str, value: int) -> None:
-        """Append one operational metric (JSONL sidecar). Shares the
-        log lock so concurrent appenders never interleave a line."""
-        row = {"ts": time.time(), "kind": kind, "name": name, "value": int(value)}
-        with self._log_lock():
-            with open(os.path.join(self.root, "metrics.jsonl"), "a") as f:
-                f.write(json.dumps(row) + "\n")
-
-    def custom_metrics(self) -> DataFrame:
-        path = os.path.join(self.root, "metrics.jsonl")
-        rows = []
-        if os.path.exists(path):
-            with open(path) as f:
-                rows = [
-                    (r["ts"], r["kind"], r["name"], r["value"])
-                    for r in map(json.loads, f)
-                ]
-        return self.spark.createDataFrame(
-            rows, "ts double, kind string, name string, value long"
-        )
-
     # -- state / watermark (queries.py:28-35) ---------------------------
 
     def _state_path(self) -> str:

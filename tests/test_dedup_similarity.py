@@ -3,12 +3,15 @@ planted near-duplicates are found, LSH recall vs exact, determinism."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from changesetmd_spark.operators import dedup, similarity
+from changesetmd_spark.profile import lsh_candidates
 
 
 @pytest.fixture(scope="module")
@@ -348,62 +351,102 @@ def test_embed_pair_bucket_collisions_stay_linear_on_random_corpus(spark):
     assert total <= 80, f"pair-bucket candidates not linear: {total}"
 
 
-def test_candidate_telemetry_counts_and_flush(spark, docs, vectors, tmp_path):
-    """VERDICT r3 item 4: every LSH family can report its candidate-
-    pair count (the n²/2^bits collision-tail gauge) via a zero-extra-
-    job observation, and flush() lands the rows in a SnapStore metrics
-    sidecar. The observed count must equal an independent recount of
-    the candidate relation."""
-    from changesetmd_spark.sources.snapstore import SnapStore
-    from changesetmd_spark.telemetry import CandidateTelemetry
-
-    tel = CandidateTelemetry()
-    sh_pairs = dedup.simhash_pairs(docs, telemetry=tel)
-    mh_pairs = dedup.minhash_lsh_pairs(docs, telemetry=tel)
-    em_pairs = similarity.embed_neardup_pairs(vectors, telemetry=tel)
-    # synthetic 64-bit phash: exact text copies share a hash → collisions
-    ph = docs.select(
-        F.col("doc_id").alias("image_id"),
-        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long").alias("phash"),
+def _phash_images(docs):
+    """Synthetic 64-bit phash: exact text copies share a hash, so the
+    bands collide."""
+    return docs.select(
+        F.col("doc_id").alias("id"),
+        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long").alias("sig"),
     )
-    ph_pairs = dedup.phash_neardup_pairs(ph, telemetry=tel)
 
-    # consume each relation once (the observation rides these actions)
-    for df in (sh_pairs, mh_pairs, em_pairs, ph_pairs):
-        df.count()
 
-    got = tel.counts()
-    assert set(got) == {"simhash", "minhash", "embed", "phash"}
-    assert all(v >= 0 for v in got.values())
-    # exact copies guarantee non-empty candidate sets for the text families
-    assert got["simhash"] > 0 and got["minhash"] > 0 and got["embed"] > 0
+def _embed_buckets(vecs):
+    keys = similarity.lsh_table_keys(
+        similarity.quantized(F.col("embedding")),
+        similarity.PAIR_TABLES,
+        similarity.PAIR_BITS,
+        similarity.PAIR_PLANE_BASE,
+    )
+    return vecs.select(F.col("vec_id").alias("id"), F.explode(keys).alias("bucket"))
 
-    # independent recount: simhash candidates = distinct band-collision
-    # pairs BEFORE the hamming refine
-    sigs = dedup.simhash_sigs(docs)
-    bands = dedup.band_keys(sigs, dedup.SH_BANDS, dedup.SH_BAND_BITS)
-    a, b = bands.alias("a"), bands.alias("b")
-    recount = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col("a.id") < F.col("b.id")),
+
+# family → (pairs operator, its bucket relation, the bucket columns,
+# the hamming bound Catalyst fuses into the bucket join's condition)
+_LSH_FAMILIES = {
+    "simhash": lambda docs, vecs: (
+        dedup.simhash_pairs(docs),
+        dedup.band_keys(dedup.simhash_sigs(docs), dedup.SH_BANDS, dedup.SH_BAND_BITS),
+        ["band", "bits"],
+        dedup.SH_MAX_HAMMING,
+    ),
+    "phash": lambda docs, vecs: (
+        dedup.phash_neardup_pairs(_phash_images(docs), id_col="id", phash_col="sig"),
+        dedup.band_keys(_phash_images(docs), dedup.PH_BANDS, dedup.PH_BAND_BITS),
+        ["band", "bits"],
+        dedup.PH_MAX_HAMMING,
+    ),
+    "minhash": lambda docs, vecs: (
+        dedup.minhash_lsh_pairs(docs), dedup.minhash_bands(docs), ["band", "band_sig"], None
+    ),
+    "embed": lambda docs, vecs: (
+        similarity.embed_neardup_pairs(vecs), _embed_buckets(vecs), ["bucket"], None
+    ),
+}
+
+
+def _bucket_join_rows(keyed, buckets, max_hamming):
+    """Recount, outside Spark, the rows a bucket self-join with a < b
+    emits: C(n, 2) per bucket, or, where the hamming refine sits in the
+    join condition, the pairs per bucket within ``max_hamming``."""
+    total = 0
+    for _, g in keyed.toPandas().groupby(buckets):
+        if max_hamming is None:
+            total += len(g) * (len(g) - 1) // 2
+            continue
+        sigs = [int(x) for x in g["sig"]]
+        total += sum(
+            bin((sa ^ sb) & (2**64 - 1)).count("1") <= max_hamming
+            for sa, sb in itertools.combinations(sigs, 2)
         )
-        .select("a.id", "b.id")
-        .distinct()
-        .count()
-    )
-    assert got["simhash"] == recount
+    return total
 
-    store = SnapStore(spark, str(tmp_path / "telstore"), key="id")
-    flushed = tel.flush(store)
-    assert flushed == got
-    rows = {
-        (r.name): r.value
-        for r in store.custom_metrics().filter(F.col("kind") == "lsh_candidates").collect()
-    }
-    assert rows == got
+
+@pytest.mark.parametrize("family", sorted(_LSH_FAMILIES))
+def test_lsh_candidates_equal_bucket_recount(spark, docs, vectors, family):
+    """lsh_candidates on the timed aggregate (the plan count() runs)
+    equals an independent recount of the bucket self-join's rows."""
+    pairs, keyed, buckets, max_hamming = _LSH_FAMILIES[family](docs, vectors)
+    agg = pairs.groupBy().count()
+    agg.collect()
+    got = lsh_candidates(agg)
+    assert got == _bucket_join_rows(keyed, buckets, max_hamming)
+    # exact copies (and the planted vector near-dup) fill some bucket
+    assert got > 0
+
+
+def test_lsh_candidates_rejects_a_plan_that_never_ran(spark, docs):
+    pairs = dedup.simhash_pairs(docs)
+    agg = pairs.groupBy().count()
+    pairs.count()  # runs a NEW Dataset: agg's plan never executes
+    with pytest.raises(RuntimeError, match="not final"):
+        lsh_candidates(agg)
+
+
+def test_lsh_candidates_rejects_a_plan_without_a_bucket_join(spark, docs):
+    agg = docs.alias("a").join(docs.alias("b"), "doc_id").groupBy().count()
+    agg.collect()
+    with pytest.raises(ValueError, match="found 0"):
+        lsh_candidates(agg)
+
+
+def test_lsh_candidates_rejects_two_bucket_joins(spark, docs):
+    both = dedup.simhash_pairs(docs).select("doc_a", "doc_b").union(
+        dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b")
+    )
+    agg = both.groupBy().count()
+    agg.collect()
+    with pytest.raises(ValueError, match="found 2"):
+        lsh_candidates(agg)
 
 
 def test_dedup_clusters_transitive_closure(spark):

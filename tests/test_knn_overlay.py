@@ -386,6 +386,23 @@ def test_polygon_contains_matches_numpy_oracle(spark):
     assert got == want and len(want) > 50
 
 
+def test_polygon_compact_build_rejects_shuffle_path(spark):
+    """compact_build always broadcasts, so an explicit
+    broadcast_polygons=False must fail instead of being ignored."""
+    import pytest
+
+    from changesetmd_spark.operators import polygon_join as pj
+
+    pts = spark.createDataFrame([(0, 1.0, 1.0)], "point_id long, lat double, lon double")
+    polys = spark.createDataFrame(
+        [(0, [0.0, 2.0, 1.0], [0.0, 0.0, 2.0])], "poly_id long, xs array<double>, ys array<double>"
+    )
+    with pytest.raises(ValueError, match="broadcast-path"):
+        pj.polygon_contains_join(
+            pts, polys, n_vertices=3, broadcast_polygons=False, compact_build=True
+        )
+
+
 def test_safe_knn_guard_rejects_oversized_certificate(spark):
     """r6 ADVICE fix: the driver-side certificate collect is bounded by
     max_cert_rows — a query side past the broadcast-small contract must

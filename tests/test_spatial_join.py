@@ -148,6 +148,35 @@ def test_compact_build_matches_default(spark):
     assert got == want
 
 
+def test_null_coordinates_join_nothing(spark):
+    """A null lon gets hex cell 0, which no cover cell equals. A null
+    lat is clamped to 90, so it lands in the polar cell this box's
+    cover holds, and the refine on the raw null lat drops it. Either
+    way the point is absent from every contains_join path's output."""
+    points = spark.createDataFrame(
+        [(0, 89.5, 0.5), (1, None, 0.5), (2, 89.5, None)],
+        "point_id long, lat double, lon double",
+    )
+    boxes = spark.createDataFrame(
+        [(0, 89.0, 90.0, 0.0, 1.0)],
+        "box_id long, min_lat double, max_lat double, min_lon double, max_lon double",
+    )
+    cells = {r.point_id: r.hex_cell for r in sj.tile_points(points, res=3).collect()}
+    assert cells[2] == 0
+    assert cells[1] == sj.tile_points(
+        spark.createDataFrame([(90.0, 0.5)], "lat double, lon double"), res=3
+    ).first().hex_cell
+    cover = {r.hex_cell for r in sj.cover_boxes(boxes, res=3).collect()}
+    assert cells[1] in cover and 0 not in cover
+    for kw in (
+        {"broadcast_boxes": True},
+        {"broadcast_boxes": True, "compact_build": True},
+        {"broadcast_boxes": False},
+    ):
+        got = {r.point_id for r in sj.contains_join(points, boxes, res=3, **kw).collect()}
+        assert got == {0}, kw
+
+
 def test_skewed_hot_cell_salted_parity(spark):
     """Hot-cell skew (city effect): 40% of points in one 0.5-degree
     spot. The salted shuffle path must agree with broadcast exactly."""
