@@ -433,6 +433,19 @@ def _collect_centroids(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray, np
     return ids, C, n2
 
 
+def _check_exact(n2: np.ndarray, side: str) -> None:
+    """Raise unless every squared norm in ``n2`` is below 2^53, the
+    bound under which the float64 matmul in ``_cells_udf`` is exact. A
+    float64 sum that reaches 2^53 rounds to at least 2^53, so a norm
+    past the bound is never missed."""
+    top = float(n2.max(initial=0.0))
+    if top >= 2.0**53:
+        raise ValueError(
+            f"_cells_udf: a quantized {side} squared norm is {top:.6g} >= 2^53, "
+            "so the float64 matmul is not integer-exact"
+        )
+
+
 def _cells_udf(centroids: DataFrame, nprobe: int):
     """Arrow pandas UDF: v_vec → array of the ``nprobe`` nearest
     centroid ids in rank order (quantized cosine desc, c_id asc).
@@ -444,16 +457,25 @@ def _cells_udf(centroids: DataFrame, nprobe: int):
     (≤ ~1e6) over DIM=64 terms keep every partial sum < 2^53, so the
     float64 matmul is integer-exact; cos_q then replicates the column
     expression's IEEE op order (dot·1e6 / (√n_a·√n_b), floor) on
-    identical doubles — bit-identical cells, oracle-gated."""
+    identical doubles — bit-identical cells, oracle-gated.
+
+    The bound is checked, not assumed. Every partial sum of a squared
+    norm is at most the norm, and by Cauchy-Schwarz every partial sum
+    of a dot is at most √n_v·√n_c, so all of them stay below 2^53 iff
+    both squared norms do. The centroid side is checked once here,
+    the vector side once per batch; either raises, naming the bound,
+    instead of returning inexact cells."""
     ids, C, cn2 = _collect_centroids(centroids)
+    _check_exact(cn2, "centroid")
     k = min(nprobe, len(ids))
     sqrt_cn2 = np.sqrt(cn2)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _cells(vecs: pd.Series) -> pd.Series:
         m = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, DIM)
-        dots = m @ C.T                                    # integer-exact
         vn2 = (m * m).sum(axis=1)                         # integer-exact
+        _check_exact(vn2, "vector")
+        dots = m @ C.T                                    # integer-exact
         denom = np.sqrt(vn2)[:, None] * sqrt_cn2[None, :]
         with np.errstate(divide="ignore", invalid="ignore"):
             sim = np.where(denom > 0, np.floor(dots * 1e6 / denom), 0.0)

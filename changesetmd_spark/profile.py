@@ -54,6 +54,14 @@ def executed_nodes(df: DataFrame):
         stack.extend(children.apply(i) for i in range(children.size()))
 
 
+def operators(df: DataFrame, *names: str) -> list:
+    """The operators of ``df``'s executed plan whose class is one of
+    ``names`` (e.g. ``"FileSourceScanExec"``), as ``executed_nodes``
+    walks them. Read an operator's SQL metric with
+    ``node.metrics().apply("numFiles").value()``."""
+    return [n for n in executed_nodes(df) if n.getClass().getSimpleName() in names]
+
+
 def _leading_key(join) -> str | None:
     key = join.leftKeys().head()
     if key.getClass().getSimpleName() != "AttributeReference":
@@ -72,10 +80,7 @@ def lsh_candidates(df: DataFrame) -> int:
     buckets. For the hamming families (SimHash, phash) the optimizer
     also moves the hamming refine into the join, so the count is the
     band matches within the bound; random collisions do not show."""
-    joins = [
-        n for n in executed_nodes(df)
-        if n.getClass().getSimpleName() in _JOINS and _leading_key(n) in _LSH_KEYS
-    ]
+    joins = [n for n in operators(df, *_JOINS) if _leading_key(n) in _LSH_KEYS]
     if len(joins) != 1:
         raise ValueError(f"expected one band/bucket join in the executed plan, found {len(joins)}")
     return int(joins[0].metrics().apply("numOutputRows").value())

@@ -20,8 +20,14 @@ Iceberg calls (``writeTo().append()``, ``MERGE INTO``,
 - **state row** (osm_changeset_state, queries.py:28-35): watermark +
   ``update_in_progress`` mutex with crash-safe release.
 - **lineage + metrics** (A15 + north_rule): every snapshot records
-  parent id, operation, row/file counts, wall ms, and per-partition
-  row counts → queryable as DataFrames.
+  parent id, operation, row/file counts, wall ms, per-partition row
+  counts and its schema → queryable as DataFrames.
+
+Reads scan a set of snapshots in ONE parquet scan (``_scan``): the
+schema comes from the log (no footer reads), each row is tagged with
+its snapshot id from its file's directory, and merge-on-read
+resolution runs over that one relation. A column whose type changes
+between snapshots raises instead of being coerced.
 
 Concurrency: single-writer per table (the reference's LOCK TABLE ...
 NOWAIT, changesetmd.py:309-313) via the mutex in state; Iceberg's
@@ -37,6 +43,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 LOG = "snapshots.json"
 STATE = "state.json"
@@ -45,6 +52,18 @@ OP_APPEND = "append"
 OP_MERGE = "merge"
 OP_DELETE = "delete"
 OP_COMPACT = "compact"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every nested field, array element and map value
+    nullable: the form two snapshots' types are compared in."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -341,6 +360,7 @@ class SnapStore:
                 "wall_ms": wall_ms,
                 "rows_per_s": round(rows / max(wall_ms, 1) * 1000, 2),
                 "partitions": part_rows,
+                "schema": df.schema.json(),
                 **(meta or {}),
             }
         )
@@ -513,31 +533,28 @@ class SnapStore:
         Determinism: snapshot ids are unique, so "latest keyed
         snapshot" needs no tie-break; within one snapshot every row is
         kept (multi-set), so there is no nondeterministic survivor.
-        Scale: resolution is one aggregation over keyed-delta rows only
-        (small — bounded by auto-compaction) + one equi-join on the
-        key; AQE broadcasts the aggregate when it is small.
+        Scale: every snapshot from the newest compact on is read by ONE
+        parquet scan (``_scan``), so the plan does not grow with the
+        log. Resolution is one aggregation over keyed-delta rows only
+        (small — bounded by auto-compaction; the ``_keyed`` filter
+        prunes the scan to the keyed snapshots' files) + one equi-join
+        on the key; AQE broadcasts the aggregate when it is small.
 
         Schema evolution (Iceberg ADD COLUMN analog, the reference's
         ``ADD COLUMN IF NOT EXISTS geom`` queries.py:54): snapshots may
-        carry columns earlier snapshots lack; the union backfills the
-        missing columns with NULL, so readers always see the latest
-        (widest) schema."""
+        carry columns earlier snapshots lack. The schema comes from the
+        log (``_schema``): the widest one as of ``as_of``, and the scan
+        reads the missing columns as NULL. A column whose type differs
+        between snapshots raises ValueError."""
         snaps = self._deltas(upto=as_of)
         if not snaps:
             raise ValueError("empty table")
         self._check_live(snaps)
-        keyed_ops = {s["id"] for s in snaps if s["op"] in (OP_MERGE, OP_DELETE)}
-        dfs = [
-            self.spark.read.parquet(s["path"])
-            .withColumn("_snap", F.lit(s["id"]).cast("long"))
-            .withColumn("_keyed", F.lit(s["id"] in keyed_ops))
-            for s in snaps
-        ]
-        all_rows = dfs[0]
-        for d in dfs[1:]:
-            all_rows = all_rows.unionByName(d, allowMissingColumns=True)
+        keyed_ops = [s["id"] for s in snaps if s["op"] in (OP_MERGE, OP_DELETE)]
+        all_rows = self._scan(snaps)
         if not keyed_ops:
-            return all_rows.filter(~F.col("_deleted")).drop("_deleted", "_snap", "_keyed")
+            return all_rows.filter(~F.col("_deleted")).drop("_deleted", "_snap")
+        all_rows = all_rows.withColumn("_keyed", F.col("_snap").isin(keyed_ops))
         latest_keyed = (
             all_rows.filter(F.col("_keyed"))
             .groupBy(self.key)
@@ -554,9 +571,11 @@ class SnapStore:
 
     def incremental(self, start_exclusive: int, end_inclusive: int | None = None) -> DataFrame:
         """A13/A14: rows written in (start, end] — Iceberg
-        start-snapshot-id/end-snapshot-id incremental read. Total API:
-        an empty range returns an empty DataFrame with the table schema
-        (never None), so callers can chain count()/union unguarded."""
+        start-snapshot-id/end-snapshot-id incremental read, tagged with
+        ``_snap``. Total API: an empty range returns an empty DataFrame
+        with the current table schema, the one a non-empty range up to
+        the head gets (never None), so callers can chain count()/union
+        unguarded."""
         all_snaps = self.snapshots()
         if not all_snaps:
             raise ValueError("empty table")
@@ -568,20 +587,61 @@ class SnapStore:
             and s["op"] != OP_COMPACT
         ]
         if not snaps:
-            return (
-                self.spark.read.parquet(all_snaps[-1]["path"])
-                .withColumn("_snap", F.lit(-1).cast("long"))
-                .limit(0)
-            )
+            return self._scan(self._deltas()).limit(0)
         self._check_live(snaps)
-        dfs = [
-            self.spark.read.parquet(s["path"]).withColumn("_snap", F.lit(s["id"]).cast("long"))
-            for s in snaps
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return self._scan(snaps)
+
+    def _scan(self, snaps: list[dict]) -> DataFrame:
+        """One parquet scan over the data directories of ``snaps``, read
+        with the table's schema as of the newest of them (``_schema``),
+        each row tagged with its snapshot id as ``_snap``. The tag comes
+        from the row's file: its directory name maps to the snapshot id
+        through a literal map. A file whose directory is in no log entry
+        fails the query instead of getting a null ``_snap``."""
+        ids = F.create_map(
+            *[F.lit(x) for s in snaps for x in (os.path.basename(s["path"]), s["id"])]
+        )
+        file_path = F.col("_metadata.file_path")
+        snap = F.element_at(ids, F.regexp_extract(file_path, r"([^/]+)/[^/]+$", 1))
+        orphan = F.raise_error(F.concat(F.lit("file in no snapshot of the log: "), file_path))
+        return (
+            self.spark.read.schema(self._schema(max(s["id"] for s in snaps)))
+            .parquet(*[s["path"] for s in snaps])
+            .withColumn("_snap", F.when(snap.isNull(), orphan).otherwise(snap).cast("long"))
+        )
+
+    def _schema(self, as_of: int) -> StructType:
+        """The table's schema as of snapshot ``as_of``: a fold over the
+        log in log order. Columns keep the order of their first
+        appearance, as ``unionByName(allowMissingColumns=True)`` orders
+        them, and every field is nullable, so rows of a snapshot that
+        lacks a column read it as NULL. A column whose type changes
+        raises; a difference in nullability alone is not a change.
+
+        Entries written before the log recorded ``schema`` fall back to
+        their snapshot's parquet footer. Two kinds are skipped instead:
+        an expired one, whose footer is gone, and one older than the
+        newest compact, which carries its columns (so a read never pays
+        for the footers of snapshots it does not scan)."""
+        log = [s for s in self.snapshots() if s["id"] <= as_of]
+        base = max((s["id"] for s in log if s["op"] == OP_COMPACT), default=0)
+        fields: dict[str, tuple[DataType, int]] = {}
+        for s in log:
+            if "schema" in s:
+                schema = StructType.fromJson(json.loads(s["schema"]))
+            elif s.get("expired") or s["id"] < base:
+                continue
+            else:
+                schema = self.spark.read.parquet(s["path"]).schema
+            for f in schema.fields:
+                t = _nullable(f.dataType)
+                first_t, first_id = fields.setdefault(f.name, (t, s["id"]))
+                if t != first_t:
+                    raise ValueError(
+                        f"column {f.name!r} changes type: {first_t.simpleString()} in "
+                        f"snapshot {first_id}, {t.simpleString()} in snapshot {s['id']}"
+                    )
+        return StructType([StructField(n, t) for n, (t, _) in fields.items()])
 
     # -- lineage / metrics tables (A15 + north_rule) -------------------
 

@@ -558,3 +558,22 @@ def test_quota_sample_exact_budget_and_determinism(spark):
     assert by == {"big": 50, "small": 50}
     tiny = sampling.quota_sample(df.filter(F.col("doc_id") >= 990), "lang", 50, "doc_id")
     assert tiny.count() == 10  # stratum smaller than quota survives whole
+
+
+def test_cells_udf_rejects_norms_past_the_float64_exact_bound(spark):
+    """The IVF assignment matmul is integer-exact only while every
+    partial sum stays below 2^53, i.e. while both squared norms do. A
+    vector batch past the bound fails the job and a centroid set past
+    it fails at once, naming the bound, instead of returning inexact
+    cells."""
+    def prep(x):
+        vdf = spark.createDataFrame(pd.DataFrame({"vec_id": [0], "embedding": [[x] * similarity.DIM]}))
+        return similarity._prep(vdf, "vec_id", "embedding", "v_")
+
+    cents = similarity._centroid_frame(spark, [(0, [1_000_000] * similarity.DIM)])
+    assert [r.ivf_cell for r in similarity.ivf_assign_lists(prep(0.5), cents).collect()] == [0]
+    with pytest.raises(Exception, match=r"vector squared norm is 1\.6e\+17 >= 2\^53"):
+        similarity.ivf_assign_lists(prep(50.0), cents).collect()  # quantized 5e7 per element
+    huge = similarity._centroid_frame(spark, [(0, [200_000_000] * similarity.DIM)])
+    with pytest.raises(ValueError, match=r"centroid squared norm is 2\.56e\+18 >= 2\^53"):
+        similarity.ivf_assign_lists(prep(0.5), huge)

@@ -663,3 +663,186 @@ def test_release_is_nonce_guarded_against_stolen_lock(spark, tmp_path):
     with store._log_lock():
         assert SnapStore._read_lock_record(lock) is not None
     assert not os.path.exists(lock)
+
+
+# ---------------------------------------------------------------------------
+# the one-scan read path (_scan / _schema)
+# ---------------------------------------------------------------------------
+
+def _resolve(log, as_of):
+    """Pure-Python replay of read()'s resolution contract over
+    ``log`` = [(snapshot id, op, [(k, v, deleted), ...])] of the
+    append/merge/delete snapshots. Compaction preserves the state, so
+    compact snapshots are not in ``log``."""
+    snaps = [s for s in log if s[0] <= as_of]
+    kmax = {}
+    for sid, op, rows in snaps:
+        if op in ("merge", "delete"):
+            for k, _, _ in rows:
+                kmax[k] = sid
+    out = []
+    for sid, op, rows in snaps:
+        keyed = op in ("merge", "delete")
+        for k, v, deleted in rows:
+            m = kmax.get(k)
+            if (m is None or (keyed and sid == m) or (not keyed and sid > m)) and not deleted:
+                out.append((k, v))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("seed", [11, 12])
+def test_read_matches_a_replay_of_the_resolution_contract(spark, tmp_path, seed):
+    """Seeded random append/merge/delete_keys/compact sequences on a
+    table with several rows per key: read() and read(as_of=id) for
+    every snapshot id equal a pure-Python replay of the contract."""
+    import random
+
+    rng = random.Random(seed)
+    st = SnapStore(spark, str(tmp_path / "m"), key="k", auto_compact_every=4)
+    schema = "k int, v int"
+
+    def rows():
+        return [(rng.randrange(6), rng.randrange(1000)) for _ in range(rng.randint(1, 6))]
+
+    log = []
+    first = rows()
+    log.append((st.create(spark.createDataFrame(first, schema)), "append",
+                [(k, v, False) for k, v in first]))
+    for _ in range(9):
+        op = rng.choice(["append", "merge", "merge", "delete", "compact"])
+        if op == "compact":
+            st.compact()
+            continue
+        if op == "delete":
+            keys = rng.sample(range(6), rng.randint(1, 3))
+            cur = _resolve(log, log[-1][0])
+            sid = st.delete_keys(spark.createDataFrame([(k,) for k in keys], "k int"))
+            log.append((sid, op, [(k, v, True) for k, v in cur if k in keys]))
+            continue
+        new = rows()
+        df = spark.createDataFrame(new, schema)
+        sid = st.append(df) if op == "append" else st.merge(df)
+        log.append((sid, op, [(k, v, False) for k, v in new]))
+
+    ids = [s["id"] for s in st.snapshots()]
+    assert sorted((r.k, r.v) for r in st.read().collect()) == _resolve(log, ids[-1])
+    for sid in ids:
+        got = sorted((r.k, r.v) for r in st.read(as_of=sid).collect())
+        assert got == _resolve(log, sid), f"as_of={sid}"
+
+
+def test_read_is_one_parquet_scan_over_a_long_log(spark, tmp_path):
+    """read() over a log of 10+ snapshots runs one parquet scan, not
+    one per snapshot. With keyed snapshots the resolution's aggregate
+    reads the same relation through a second scan, pruned to the keyed
+    snapshots' files."""
+    from changesetmd_spark.profile import operators
+
+    base = synth.changesets(spark, 50)
+    st = SnapStore(spark, str(tmp_path / "a"), key="id")
+    st.create(base)
+    for i in range(10):
+        st.append(base.filter(F.col("id") == i + 1))
+    agg = st.read().groupBy().count()
+    assert agg.collect()[0][0] == 60
+    assert len(operators(agg, "FileSourceScanExec")) == 1
+
+    st = SnapStore(spark, str(tmp_path / "k"), key="id", auto_compact_every=0)
+    st.create(base)
+    for i in range(10):
+        st.merge(base.filter(F.col("id") <= i + 1).withColumn("num_changes", F.lit(i)))
+    st.delete_keys(spark.range(40, 45).select("id"))
+    agg = st.read().groupBy().count()
+    assert agg.collect()[0][0] == 45
+    scans = operators(agg, "FileSourceScanExec")
+    files = sorted(n.metrics().apply("numFiles").value() for n in scans)
+    keyed = sum(s["n_files"] for s in st.snapshots() if s["op"] != "append")
+    assert files == [keyed, keyed + st.snapshots()[0]["n_files"]]
+
+
+def test_empty_incremental_has_the_table_schema(spark, tmp_path):
+    """An empty incremental range gets the same widest schema and
+    ``_snap`` type as a non-empty range up to the head, even when the
+    last snapshot lacks a column an earlier one added."""
+    st = SnapStore(spark, str(tmp_path / "e"), key="id")
+    st.create(spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"))
+    st.merge(spark.createDataFrame([(2, "b2", 7.5)], "id int, v string, score double"))
+    head = st.merge(spark.createDataFrame([(1, "a2")], "id int, v string"))
+    full = st.incremental(0)
+    empty = st.incremental(head)
+    assert full.count() == 2 and empty.count() == 0
+    assert empty.schema == full.schema
+    assert full.schema["_snap"].dataType.simpleString() == "bigint"
+    assert [c for c in full.columns if c != "_snap"] == ["id", "v", "_deleted", "score"]
+
+
+def test_type_change_across_snapshots_raises(spark, tmp_path):
+    """A column whose type differs between snapshots fails the read,
+    naming the column, both types and both snapshot ids; a difference
+    in nullability only (a map's valueContainsNull) does not."""
+    import json
+
+    st = SnapStore(spark, str(tmp_path / "t"), key="id")
+    st.create(spark.createDataFrame([(1, "a")], "id int, v string"))
+    st.merge(spark.createDataFrame([(1, 5)], "id int, v int"))
+    with pytest.raises(ValueError, match=r"'v' changes type: string in snapshot 0, int in snapshot 1"):
+        st.read()
+
+    st = SnapStore(spark, str(tmp_path / "n"), key="id")
+    st.create(spark.range(2).select(F.col("id"), F.create_map(F.lit("k"), F.lit("v")).alias("tags")))
+    st.merge(spark.createDataFrame([(1, {"k": None})], "id long, tags map<string,string>"))
+    assert [json.loads(s["schema"])["fields"][1]["type"]["valueContainsNull"]
+            for s in st.snapshots()] == [False, True]
+    rows = {r.id: r.tags for r in st.read().collect()}
+    assert rows == {0: {"k": "v"}, 1: {"k": None}}
+
+
+def test_file_outside_the_log_fails_the_read(spark, tmp_path):
+    """A scanned file whose directory is in no log entry fails the
+    query instead of reading with a null ``_snap``. SnapStore names its
+    directories snap-<hex>; a directory whose name the file index
+    URI-encodes (here a space) is such a file."""
+    import json
+    import os
+
+    st = SnapStore(spark, str(tmp_path / "o"), key="id")
+    st.create(synth.changesets(spark, 10))
+    st.merge(synth.changesets(spark, 3).withColumn("num_changes", F.lit(1)))
+    snaps = st.snapshots()
+    moved = os.path.join(os.path.dirname(snaps[1]["path"]), "snap moved")
+    os.rename(snaps[1]["path"], moved)
+    snaps[1]["path"] = moved
+    with open(st._log_path(), "w") as f:
+        json.dump(snaps, f)
+    with pytest.raises(Exception, match="file in no snapshot of the log"):
+        st.read().count()
+
+
+def test_log_without_schema_reads_the_footers(spark, tmp_path):
+    """Log entries written before the log recorded ``schema`` take it
+    from their snapshot's parquet footer (entries older than the newest
+    compact, expired or not, are skipped); read() and time travel give
+    the same tables, columns in the same order."""
+    import json
+
+    st = SnapStore(spark, str(tmp_path / "l"), key="id")
+    base = synth.changesets(spark, 40)
+    st.create(base)
+    st.merge(base.filter(F.col("id") < 5).withColumn("num_changes", F.lit(3)))
+    st.compact()
+    st.merge(base.filter(F.col("id") == 7).withColumn("score", F.lit(1.5)))
+    st.delete_keys(spark.range(30, 33).select("id"))
+    want = {as_of: (st.read(as_of).columns, _table_fingerprint(st.read(as_of))) for as_of in (1, 4)}
+
+    snaps = st.snapshots()
+    assert all("schema" in s for s in snaps)
+    for s in snaps:
+        del s["schema"]
+    with open(st._log_path(), "w") as f:
+        json.dump(snaps, f)
+    for as_of, (cols, fp) in want.items():
+        assert st.read(as_of).columns == cols
+        assert _table_fingerprint(st.read(as_of)) == fp
+    st.expire_snapshots()  # snapshots 0 and 1: footers gone
+    assert st.read().columns == want[4][0]
+    assert _table_fingerprint(st.read()) == want[4][1]
