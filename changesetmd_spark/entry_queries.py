@@ -20,11 +20,17 @@ floor(dist·1e6) before row_number (stable across engines).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import StructType
 
+from . import schemas
 from .functions import geo
 from .operators import dedup as dedup_ops
 from .operators import knn as knn_ops
@@ -41,7 +47,48 @@ from .operators import text as text_ops
 # ---------------------------------------------------------------------------
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Registry table ``name`` read with its declared schema
+    (``schemas.REGISTRY``), so Spark runs no schema-inference job. The
+    DataFrame has exactly the columns of the table's first data file,
+    typed as declared; a column the file lacks is absent, and a gate
+    that reads it fails at analysis, naming it."""
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(_file_schema(name, path)).parquet(path)
+
+
+def _file_schema(name: str, path: str) -> StructType:
+    """The declared fields of the columns in ``path``'s first data file
+    footer, in file order (the one footer Spark's inference would
+    read). Raises ValueError naming the table, the column and both
+    types when a file column is undeclared or has another type;
+    nullability is not compared. The footer is read with pyarrow, so
+    ``path`` is local or a URI pyarrow's filesystems open."""
+    if name not in schemas.REGISTRY:
+        raise ValueError(f"{name} is not a registry table")
+    declared = schemas.REGISTRY[name]
+    fs, first = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
+    if fs.get_file_info(first).type == pafs.FileType.Directory:
+        files = sorted(
+            f.path
+            for f in fs.get_file_info(pafs.FileSelector(first))
+            if f.type == pafs.FileType.File and not f.base_name.startswith(("_", "."))
+        )
+        if not files:
+            raise FileNotFoundError(f"{name}: no data file in {path}")
+        first = files[0]
+    fields = []
+    for col in pq.read_schema(first, filesystem=fs):
+        got = from_arrow_type(col.type, prefer_timestamp_ntz=True).simpleString()
+        if col.name not in declared.fieldNames():
+            raise ValueError(f"{name}: column {col.name} ({got}) in {first} is not declared")
+        want = declared[col.name]
+        if got != want.dataType.simpleString():
+            raise ValueError(
+                f"{name}: column {col.name} is {got} in {first}, "
+                f"declared {want.dataType.simpleString()}"
+            )
+        fields.append(want)
+    return StructType(fields)
 
 
 def points_from_orders(orders: DataFrame) -> DataFrame:
@@ -123,13 +170,14 @@ _CONTAINS_PRED = (
 # query implementations — (spark, sf_dir) -> DataFrame
 # ---------------------------------------------------------------------------
 
-def orders_phash(k):
-    """The shared 63-bit phash derivation (hi·2^31 + lo) every
-    multimodal gate seeds from — one definition, three consumers
-    (image decode/embed builders, audio builder, lat_clamp)."""
+def orders_phash(k: str = "o_orderkey") -> str:
+    """Spark SQL text of the shared 63-bit phash derivation
+    (hi·2^31 + lo) over the integer expression ``k`` — one definition,
+    four consumers (image decode/embed builders, audio builder,
+    lat_clamp, and phash_neardup's group phash)."""
     return (
-        F.pmod(k * 2654435761, F.lit(4294967296)) * F.lit(2147483648)
-        + F.pmod(k * 104729 + 42, F.lit(2147483648))
+        f"pmod({k} * 2654435761, 4294967296) * 2147483648"
+        f" + pmod({k} * 104729 + 42, 2147483648)"
     )
 
 
@@ -316,7 +364,7 @@ def q_lat_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B8: out-of-range latitude sanity rule on the phash geotag."""
     orders = load(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    lat_raw = geo.phash_to_lat(orders_phash(k))
+    lat_raw = geo.phash_to_lat(F.expr(orders_phash()))
     return orders.select(
         k.alias("point_id"),
         F.floor(geo.clamp_lat(lat_raw) * 10000).alias("lat_q"),
@@ -379,14 +427,11 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions die in the refine. Oracle replicates the derivation and
     the banding 1:1."""
     orders = load(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    g = F.expr("(o_orderkey - 1) div 5")
-    base = (
-        F.pmod(g * 2654435761, F.lit(4294967296)) * F.lit(2147483648)
-        + F.pmod(g * 104729 + 42, F.lit(2147483648))
+    base = orders_phash("((o_orderkey - 1) div 5)")
+    imgs = orders.selectExpr(
+        "o_orderkey AS img_key",
+        f"({base}) ^ CAST(power(2.0D, pmod(o_orderkey, 59)) AS BIGINT) AS phash",
     )
-    mask = F.pow(F.lit(2.0), F.pmod(k, 59)).cast("long")
-    imgs = orders.select(k.alias("img_key"), base.bitwiseXOR(mask).alias("phash"))
     return dedup_ops.phash_neardup_pairs(imgs, id_col="img_key")
 
 
@@ -606,8 +651,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (inverted-file lists, deterministic centroids, nprobe
     probing) — the second ANN index family beside hyperplane LSH."""
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-    return sim_ops.ann_ivf_topk(queries, emb, k=10)
+    return sim_ops.ann_ivf_topk(emb.filter("vec_id < 20"), emb, k=10)
 
 
 def _orders_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,15 +668,14 @@ def _orders_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     from changesetmd_spark import synth
 
     orders = load(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
     # widen (r6): the single-row-group orders scan is ONE task, which
     # serialized the whole Arrow encode→decode chain on one core; one
     # cheap shuffle of the slim (id, phash, fmt) rows buys full-width
     # Python stages (guide §2 — same fix the spatial gates use)
-    base = plan_strategy.widen_if_narrow(orders.select(
-        F.format_string("img%012d", k).alias("image_id"),
-        orders_phash(k).alias("phash"),
-        F.when(F.pmod(k, 2) == 0, "fraw").otherwise("fjpg").alias("fmt"),
+    base = plan_strategy.widen_if_narrow(orders.selectExpr(
+        "format_string('img%012d', o_orderkey) AS image_id",
+        f"{orders_phash()} AS phash",
+        "CASE WHEN pmod(o_orderkey, 2) = 0 THEN 'fraw' ELSE 'fjpg' END AS fmt",
     ))
 
     enc_schema = StructType(
@@ -694,12 +737,10 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     FRAMES = 4
 
     orders = load(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
     # widen (r6): see _orders_images — one-task scan would serialize
     # the three-stage Arrow chain (encode → frame sample → decode)
-    base = plan_strategy.widen_if_narrow(orders.select(
-        F.format_string("img%012d", k).alias("image_id"),
-        orders_phash(k).alias("phash"),
+    base = plan_strategy.widen_if_narrow(orders.selectExpr(
+        "format_string('img%012d', o_orderkey) AS image_id", f"{orders_phash()} AS phash"
     ))
     enc_schema = StructType(
         [
@@ -800,12 +841,10 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from changesetmd_spark import synth
 
     orders = load(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
     # widen (r6): see _orders_images — one-task scan would serialize
     # the PCM encode + audio_stats Arrow stages on one core
-    base = plan_strategy.widen_if_narrow(orders.select(
-        F.format_string("au%012d", k).alias("audio_id"),
-        orders_phash(k).alias("phash"),
+    base = plan_strategy.widen_if_narrow(orders.selectExpr(
+        "format_string('au%012d', o_orderkey) AS audio_id", f"{orders_phash()} AS phash"
     ))
     enc_schema = StructType(
         [
@@ -824,12 +863,8 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"audio_id": pdf["audio_id"], "bytes": blobs})
 
     stats = multimodal.audio_stats(base.mapInPandas(encode, enc_schema))
-    return stats.select(
-        "audio_id",
-        F.col("duration_ms"),
-        F.col("energy"),
-        F.col("peak").cast("long").alias("peak"),
-        F.col("zero_crossings"),
+    return stats.selectExpr(
+        "audio_id", "duration_ms", "energy", "CAST(peak AS BIGINT) AS peak", "zero_crossings"
     )
 
 
@@ -911,7 +946,6 @@ def _stream_table_source(spark: SparkSession, sf_dir: str, table: str):
     single files — expose one via symlink (no data copy). Caller must
     invoke cleanup() in a finally block (review finding: a failing
     stream otherwise leaks the temp dir)."""
-    import os
     import shutil
     import tempfile
 
@@ -919,8 +953,7 @@ def _stream_table_source(spark: SparkSession, sf_dir: str, table: str):
     stream_dir = tempfile.mkdtemp(prefix=f"stream_{table}_")
     try:
         os.symlink(os.path.abspath(path), os.path.join(stream_dir, f"{table}.parquet"))
-        schema = spark.read.parquet(path).schema
-        src = spark.readStream.schema(schema).parquet(stream_dir)
+        src = spark.readStream.schema(_file_schema(table, path)).parquet(stream_dir)
     except BaseException:
         shutil.rmtree(stream_dir, ignore_errors=True)
         raise

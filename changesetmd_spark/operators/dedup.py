@@ -23,8 +23,10 @@ from .text import (
     TOKEN_HASH_SQL,
     TOKENS_SQL,
     token_hash,
+    token_hash_expr,
     token_hash_hi,
     tokens,
+    tokens_expr,
 )
 
 # MinHash parameters (shared by Spark + oracle SQL)
@@ -90,16 +92,14 @@ def EXACT_DEDUP_SQL(id_col: str = "doc_id", text_col: str = "text", table: str =
 # shingles
 # ---------------------------------------------------------------------------
 
-def shingles(text_col) -> object:
-    """Distinct k-word shingles of a document (array<string>). Short
-    docs (<k tokens) produce one whole-text shingle."""
-    toks = tokens(text_col)
-    n = F.greatest(F.size(toks) - F.lit(SHINGLE_K - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, SHINGLE_K)),
-        )
+def shingles_expr(text: str) -> str:
+    """Spark SQL text: the distinct k-word shingles of a document
+    (array<string>). Short docs (<k tokens) produce one whole-text
+    shingle."""
+    toks = tokens_expr(text)
+    return (
+        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {SHINGLE_K - 1}, 1)), "
+        f"i -> concat_ws(' ', slice({toks}, i, {SHINGLE_K}))))"
     )
 
 
@@ -114,10 +114,24 @@ def SHINGLES_SQL(text: str) -> str:
 
 def _exploded_shingle_hashes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sh) rows: one per distinct shingle hash per doc."""
-    return docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col))).alias("_s"),
-    ).select("id", token_hash(F.col("_s")).alias("sh"))
+    return docs.selectExpr(
+        f"{id_col} AS id", f"explode({shingles_expr(text_col)}) AS _s"
+    ).selectExpr("id", f"{token_hash_expr('_s')} AS sh")
+
+
+def _jaccard_pairs(common: DataFrame, sizes: DataFrame, threshold_q: int) -> DataFrame:
+    """(doc_a, doc_b, jaccard_q) ≥ τ from per-pair common-shingle
+    counts and per-doc set sizes: |A∪B| = |A| + |B| − common."""
+    sa = sizes.selectExpr("id AS doc_a", "n_sh AS n_a")
+    sb = sizes.selectExpr("id AS doc_b", "n_sh AS n_b")
+    return (
+        common.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .selectExpr(
+            "doc_a", "doc_b", "floor(n_common * 1000000 / (n_a + n_b - n_common)) AS jaccard_q"
+        )
+        .filter(f"jaccard_q >= {threshold_q}")
+    )
 
 
 def _SHINGLE_HASHES_SQL(id_col: str, text_col: str, table: str) -> str:
@@ -158,30 +172,19 @@ def ngram_jaccard_pairs(
     sh_all = _exploded_shingle_hashes(docs, id_col, text_col).localCheckpoint()
     hot = (
         sh_all.groupBy("sh")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") > max_df)
-        .select("sh")
+        .agg(F.expr("count(*) AS _df"))
+        .filter(f"_df > {max_df}")
+        .selectExpr("sh")
     )
     sh = sh_all.join(F.broadcast(hot), "sh", "left_anti")
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
+    sizes = sh.groupBy("id").agg(F.expr("count(*) AS n_sh"))
     common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
+        sh.alias("a")
+        .join(sh.alias("b"), F.expr("a.sh = b.sh AND a.id < b.id"))
+        .groupBy(F.expr("a.id AS doc_a"), F.expr("b.id AS doc_b"))
+        .agg(F.expr("count(*) AS n_common"))
     )
-    sa = sizes.select(F.col("id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac_q = F.floor(
-        F.col("n_common") * 1000000 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    )
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac_q.alias("jaccard_q"))
-        .filter(F.col("jaccard_q") >= threshold_q)
-    )
+    return _jaccard_pairs(common, sizes, threshold_q)
 
 
 def NGRAM_JACCARD_SQL(
@@ -229,36 +232,30 @@ def minhash_bands(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     order-fixed polynomial the oracle replicates; min < P ≈ 4.3e9
     × 31³ < 2^63 — ANSI-safe). Values bit-identical to the r5 shape
     (same minima, same fold), pinned by the unchanged oracle gate."""
-    sh = _exploded_shingle_hashes(docs, id_col, text_col)
-    mins = [
-        F.min(
-            F.pmod(
-                F.lit(p * 2 + 1) * F.col("sh") + F.lit(p * 7919 + 13), F.lit(MH_PRIME)
-            )
-        ).alias(f"_m{p}")
-        for p in range(N_PERM)
-    ]
-    sig = sh.groupBy("id").agg(*mins)
-    bands_arr = F.array(
+    return _minhash_bands(_exploded_shingle_hashes(docs, id_col, text_col))
+
+
+def _minhash_bands(sh: DataFrame) -> DataFrame:
+    """``minhash_bands`` over an (id, sh) shingle-hash frame. Each
+    minimum and the whole band array are one SQL string apiece."""
+    sig = sh.groupBy("id").agg(
         *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                F.pmod(
-                    sum(
-                        F.pmod(
-                            F.col(f"_m{b * ROWS_PER_BAND + w}") * F.lit(31**w),
-                            F.lit(MH_PRIME),
-                        )
-                        for w in range(ROWS_PER_BAND)
-                    ),
-                    F.lit(MH_PRIME),
-                ).alias("band_sig"),
-            )
-            for b in range(N_BANDS)
+            F.expr(f"min(pmod({p * 2 + 1} * sh + {p * 7919 + 13}, {MH_PRIME})) AS _m{p}")
+            for p in range(N_PERM)
         ]
     )
-    return sig.select("id", F.explode(bands_arr).alias("_bd")).select(
-        "id", F.col("_bd.band").alias("band"), F.col("_bd.band_sig").alias("band_sig")
+
+    def band_sig(b: int) -> str:
+        terms = " + ".join(
+            f"pmod(_m{b * ROWS_PER_BAND + w} * {31**w}, {MH_PRIME})" for w in range(ROWS_PER_BAND)
+        )
+        return f"pmod({terms}, {MH_PRIME})"
+
+    bands = ", ".join(
+        f"struct(CAST({b} AS BIGINT) AS band, {band_sig(b)} AS band_sig)" for b in range(N_BANDS)
+    )
+    return sig.selectExpr("id", f"explode(array({bands})) AS _bd").selectExpr(
+        "id", "_bd.band AS band", "_bd.band_sig AS band_sig"
     )
 
 
@@ -278,43 +275,30 @@ def minhash_lsh_pairs(
     checkpointed here (measured slower: each consumer pipelines the
     cheap explode into its own codegen stage, and eager materialization
     breaks that — unlike ngram_jaccard where the df-cap pass made a 4th
-    full recompute).
+    full recompute). One (id, sh) frame feeds the bands, the sizes and
+    the refine; Spark still plans one explode per consumer.
     """
     sh = _exploded_shingle_hashes(docs, id_col, text_col)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-
-    bands = minhash_bands(docs, id_col, text_col)
-    ba = bands.alias("ba")
-    bb = bands.alias("bb")
+    sizes = sh.groupBy("id").agg(F.expr("count(*) AS n_sh"))
+    bands = _minhash_bands(sh)
     cands = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.band_sig") == F.col("bb.band_sig"))
-            & (F.col("ba.id") < F.col("bb.id")),
+        bands.alias("ba")
+        .join(
+            bands.alias("bb"),
+            F.expr("ba.band = bb.band AND ba.band_sig = bb.band_sig AND ba.id < bb.id"),
         )
-        .select(F.col("ba.id").alias("doc_a"), F.col("bb.id").alias("doc_b"))
+        .selectExpr("ba.id AS doc_a", "bb.id AS doc_b")
         .distinct()
     )
-    a = sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("_bid"), F.col("sh").alias("sh_b"))
+    a = sh.selectExpr("id AS doc_a", "sh AS sh_a")
+    b = sh.selectExpr("id AS _bid", "sh AS sh_b")
     common = (
         cands.join(a, "doc_a")
-        .join(b, (F.col("doc_b") == F.col("_bid")) & (F.col("sh_a") == F.col("sh_b")))
+        .join(b, F.expr("doc_b = _bid AND sh_a = sh_b"))
         .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
+        .agg(F.expr("count(*) AS n_common"))
     )
-    sa = sizes.select(F.col("id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac_q = F.floor(
-        F.col("n_common") * 1000000 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    )
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac_q.alias("jaccard_q"))
-        .filter(F.col("jaccard_q") >= threshold_q)
-    )
+    return _jaccard_pairs(common, sizes, threshold_q)
 
 
 def MINHASH_LSH_SQL(
@@ -492,23 +476,14 @@ def band_keys(sigs: DataFrame, n_bands: int, band_bits: int) -> DataFrame:
     LSH band bucket keys. Works for negative sigs too (a 64-bit family
     uses bit 63 in two's complement): shiftrightunsigned + mask yields
     the same band bits as DuckDB's arithmetic ``>>`` + mask."""
-    return sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("sig"), i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("bits"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bd"),
-    ).select("id", "sig", F.col("bd.band").alias("band"), F.col("bd.bits").alias("bits"))
+    mask = (1 << band_bits) - 1
+    bands = ", ".join(
+        f"struct({i} AS band, shiftrightunsigned(sig, {i * band_bits}) & {mask} AS bits)"
+        for i in range(n_bands)
+    )
+    return sigs.selectExpr("id", "sig", f"explode(array({bands})) AS bd").selectExpr(
+        "id", "sig", "bd.band AS band", "bd.bits AS bits"
+    )
 
 
 def _banded_hamming_pairs(
@@ -526,20 +501,11 @@ def _banded_hamming_pairs(
     if not max_hamming < n_bands:
         raise ValueError("pigeonhole requires max_hamming < n_bands")
     bands = band_keys(sigs, n_bands, band_bits)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    matches = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bits") == F.col("b.bits"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias(a_name),
-        F.col("b.id").alias(b_name),
-        F.col("a.sig").alias("sig_a"),
-        F.col("b.sig").alias("sig_b"),
+    matches = (
+        bands.alias("a")
+        .join(bands.alias("b"), F.expr("a.band = b.band AND a.bits = b.bits AND a.id < b.id"))
+        .selectExpr(f"a.id AS {a_name}", f"b.id AS {b_name}", "a.sig AS sig_a", "b.sig AS sig_b")
     )
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     # refine BEFORE the dedup shuffle (r6). The hamming test is a
     # per-row codegen filter, so running it on the raw banded matches
     # costs nothing extra — while distinct-first shuffled every
@@ -549,8 +515,8 @@ def _banded_hamming_pairs(
     # deterministic per row), but the exchange now carries only the
     # surviving near-dup pairs.
     return (
-        matches.select(a_name, b_name, ham.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        matches.selectExpr(a_name, b_name, "CAST(bit_count(sig_a ^ sig_b) AS BIGINT) AS hamming")
+        .filter(f"hamming <= {max_hamming}")
         .distinct()
     )
 
@@ -624,7 +590,7 @@ def phash_neardup_pairs(
     keep random collisions at n²/2^16 per band). The image-table
     sibling of SimHash (task brief's image-dedup family). Returns
     (img_a, img_b, hamming)."""
-    sigs = images.select(F.col(id_col).alias("id"), F.col(phash_col).alias("sig"))
+    sigs = images.selectExpr(f"{id_col} AS id", f"{phash_col} AS sig")
     return _banded_hamming_pairs(sigs, PH_BANDS, PH_BAND_BITS, max_hamming, "img_a", "img_b")
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -52,22 +52,23 @@ PAIR_PLANE_BASE = 1000  # independent md5 plane namespace from topk's 0..47
 DIM = 64  # embeddings table dimension
 
 
-def quantized(vec: Column) -> Column:
-    """array<long>: floor(x·1e6) per element (float32→double exact)."""
-    return F.transform(vec, lambda x: F.floor(x.cast("double") * QUANT))
+def quantized(vec: str) -> str:
+    """Spark SQL text, array<long>: floor(x·1e6) per element of the
+    array expression ``vec`` (float32→double exact).
+
+    This and the other expression builders of this module return SQL
+    text, not Columns: one ``F.expr``/``selectExpr`` string costs a
+    few py4j round trips, one Column call about twelve."""
+    return f"transform({vec}, x -> floor(CAST(x AS DOUBLE) * {QUANT}))"
 
 
 def QUANTIZED_SQL(vec: str) -> str:
     return f"list_transform({vec}, x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT}) AS BIGINT))"
 
 
-def dot_int(a: Column, b: Column) -> Column:
-    """Exact int64 dot product of two quantized vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+def dot_int(a: str, b: str) -> str:
+    """Spark SQL text: exact int64 dot product of two quantized vectors."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
 
 
 def DOT_INT_SQL(a: str, b: str) -> str:
@@ -77,14 +78,19 @@ def DOT_INT_SQL(a: str, b: str) -> str:
     )
 
 
-def norm2_int(a: Column) -> Column:
-    return dot_int(a, a)
+def cos_q(dot: str, n_a: str, n_b: str) -> str:
+    """Spark SQL text, quantized cosine: floor(1e6·dot/(√n_a·√n_b));
+    0 for zero norms."""
+    denom = f"sqrt(CAST({n_a} AS DOUBLE)) * sqrt(CAST({n_b} AS DOUBLE))"
+    return (
+        f"CAST(CASE WHEN {denom} > 0 THEN floor({dot} * 1000000.0D / ({denom})) ELSE 0 END AS BIGINT)"
+    )
 
 
-def cos_q(dot: Column, n_a: Column, n_b: Column) -> Column:
-    """Quantized cosine: floor(1e6·dot/(√n_a·√n_b)); 0 for zero norms."""
-    denom = F.sqrt(n_a.cast("double")) * F.sqrt(n_b.cast("double"))
-    return F.when(denom > 0, F.floor(dot * F.lit(1e6) / denom)).otherwise(F.lit(0)).cast("long")
+def _cos_q_of(a: str, b: str) -> str:
+    """``cos_q`` of the ``_prep``'d columns ``<a>vec``/``<a>n2`` and
+    ``<b>vec``/``<b>n2``."""
+    return cos_q(dot_int(f"{a}vec", f"{b}vec"), f"{a}n2", f"{b}n2")
 
 
 def COS_Q_SQL(dot: str, n_a: str, n_b: str) -> str:
@@ -96,11 +102,19 @@ def COS_Q_SQL(dot: str, n_a: str, n_b: str) -> str:
 
 
 def _prep(vectors: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
-    q = quantized(F.col(vec_col))
-    return vectors.select(
-        F.col(id_col).alias(f"{prefix}id"),
-        q.alias(f"{prefix}vec"),
-    ).withColumn(f"{prefix}n2", norm2_int(F.col(f"{prefix}vec")))
+    vec = f"{prefix}vec"
+    return vectors.selectExpr(
+        f"{id_col} AS {prefix}id", f"{quantized(vec_col)} AS {vec}"
+    ).withColumn(f"{prefix}n2", F.expr(dot_int(vec, vec)))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Rank each query's neighbors by cos_sim_q desc, neighbor_id asc
+    and keep the first ``k`` (``sim_rank`` 1..k)."""
+    rank = "row_number() OVER (PARTITION BY query_id ORDER BY cos_sim_q DESC, neighbor_id ASC)"
+    return scored.withColumn("sim_rank", F.expr(f"CAST({rank} AS BIGINT)")).filter(
+        f"sim_rank <= {k}"
+    )
 
 
 def cosine_topk(
@@ -119,18 +133,11 @@ def cosine_topk(
     v = _prep(vectors, id_col, vec_col, "v_")
     pairs = v.crossJoin(q)
     if exclude_self:
-        pairs = pairs.filter(F.col("q_id") != F.col("v_id"))
-    sim = cos_q(dot_int(F.col("q_vec"), F.col("v_vec")), F.col("q_n2"), F.col("v_n2"))
-    scored = pairs.select(
-        F.col("q_id").alias("query_id"),
-        F.col("v_id").alias("neighbor_id"),
-        sim.alias("cos_sim_q"),
+        pairs = pairs.filter("q_id != v_id")
+    scored = pairs.selectExpr(
+        "q_id AS query_id", "v_id AS neighbor_id", f"{_cos_q_of('q_', 'v_')} AS cos_sim_q"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("sim_rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def COSINE_TOPK_SQL(
@@ -325,18 +332,11 @@ def ann_lsh_topk(
     )
     pairs = v.join(F.broadcast(q), "bucket")
     if exclude_self:
-        pairs = pairs.filter(F.col("q_id") != F.col("v_id"))
-    sim = cos_q(dot_int(F.col("q_vec"), F.col("v_vec")), F.col("q_n2"), F.col("v_n2"))
-    scored = pairs.select(
-        F.col("q_id").alias("query_id"),
-        F.col("v_id").alias("neighbor_id"),
-        sim.alias("cos_sim_q"),
+        pairs = pairs.filter("q_id != v_id")
+    scored = pairs.selectExpr(
+        "q_id AS query_id", "v_id AS neighbor_id", f"{_cos_q_of('q_', 'v_')} AS cos_sim_q"
     ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("sim_rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def ANN_LSH_SQL(
@@ -405,12 +405,8 @@ def ivf_assignments(
     crossJoin + window (same cells, same rank order — see _cells_udf)."""
     cells = _cells_udf(centroids, nprobe)
     return vectors.select(
-        "v_id", "v_vec", "v_n2",
-        F.posexplode(cells(F.col("v_vec"))).alias("_pos", "ivf_cell"),
-    ).select(
-        "v_id", "v_vec", "v_n2", "ivf_cell",
-        (F.col("_pos") + 1).cast("int").alias("probe_rank"),
-    )
+        "v_id", "v_vec", "v_n2", F.posexplode(cells("v_vec")).alias("_pos", "ivf_cell")
+    ).selectExpr("v_id", "v_vec", "v_n2", "ivf_cell", "CAST(_pos + 1 AS INT) AS probe_rank")
 
 
 def _collect_centroids(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -501,8 +497,7 @@ def ivf_assign_lists(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     each vector's cell directly; cells bit-identical (see _cells_udf)."""
     cells = _cells_udf(centroids, 1)
     return vectors.select(
-        "v_id", "v_vec", "v_n2",
-        F.element_at(cells(F.col("v_vec")), 1).alias("ivf_cell"),
+        "v_id", "v_vec", "v_n2", F.element_at(cells("v_vec"), 1).alias("ivf_cell")
     )
 
 
@@ -595,10 +590,9 @@ def kmeans_fit(
     rounds, ell = 3, 2 * k
     for rnd in range(rounds):
         cdf = _centroid_frame(spark, list(enumerate(cand)))
-        sim = cos_q(dot_int(F.col("v_vec"), F.col("c_vec")), F.col("v_n2"), F.col("c_n2"))
         scored = (
             v.crossJoin(F.broadcast(cdf))
-            .withColumn("_csim", sim)
+            .withColumn("_csim", F.expr(_cos_q_of("v_", "c_")))
             .groupBy("v_id")
             .agg(F.max("_csim").alias("_near"), F.any_value("v_vec").alias("_vec"))
             .withColumn("_dist", F.lit(QUANT).cast("long") - F.col("_near"))
@@ -672,32 +666,22 @@ def ann_ivf_topk(
     use trained centers instead; the oracle gate covers the default
     deterministic set (the trained path is iterative, property-tested)."""
     cents = centroids if centroids is not None else _prep(
-        vectors.filter(F.col(id_col) < n_centroids), id_col, vec_col, "c_"
+        vectors.filter(f"{id_col} < {n_centroids}"), id_col, vec_col, "c_"
     )
     cents = _collect_centroids(cents)  # one driver collect feeds both UDFs
     v = _prep(vectors, id_col, vec_col, "v_")
     q = _prep(queries, id_col, vec_col, "v_")
     lists = ivf_assign_lists(v, cents)
-    probes = ivf_assignments(q, cents, nprobe=nprobe).select(
-        F.col("v_id").alias("q_id"),
-        F.col("v_vec").alias("q_vec"),
-        F.col("v_n2").alias("q_n2"),
-        "ivf_cell",
+    probes = ivf_assignments(q, cents, nprobe=nprobe).selectExpr(
+        "v_id AS q_id", "v_vec AS q_vec", "v_n2 AS q_n2", "ivf_cell"
     )
     cand = lists.join(F.broadcast(probes), "ivf_cell")
     if exclude_self:
-        cand = cand.filter(F.col("q_id") != F.col("v_id"))
-    sim = cos_q(dot_int(F.col("q_vec"), F.col("v_vec")), F.col("q_n2"), F.col("v_n2"))
-    scored = cand.select(
-        F.col("q_id").alias("query_id"),
-        F.col("v_id").alias("neighbor_id"),
-        sim.alias("cos_sim_q"),
+        cand = cand.filter("q_id != v_id")
+    scored = cand.selectExpr(
+        "q_id AS query_id", "v_id AS neighbor_id", f"{_cos_q_of('q_', 'v_')} AS cos_sim_q"
     ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("sim_rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def ANN_IVF_SQL(
@@ -793,10 +777,9 @@ def embed_neardup_pairs(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    sim = cos_q(dot_int(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
-    return (
-        cand.select("vec_a", "vec_b", sim.alias("cos_sim_q"))
-        .filter(F.col("cos_sim_q") >= threshold_q)
+    sim = cos_q(dot_int("va", "vb"), "na", "nb")
+    return cand.selectExpr("vec_a", "vec_b", f"{sim} AS cos_sim_q").filter(
+        f"cos_sim_q >= {threshold_q}"
     )
 
 

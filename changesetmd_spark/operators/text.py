@@ -42,6 +42,13 @@ def TOKENS_SQL(text: str) -> str:
     return f"list_filter(string_split({text}, ' '), t -> t != '')"
 
 
+def tokens_expr(text: str) -> str:
+    """Spark SQL text of ``tokens`` over the column or expression
+    ``text``. One ``F.expr``/``selectExpr`` string costs a few py4j
+    round trips, where each Column call costs about twelve."""
+    return f"filter(split({text}, ' '), t -> t != '')"
+
+
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
@@ -72,6 +79,16 @@ def token_hash(tok: Column) -> Column:
 
 def TOKEN_HASH_SQL(tok: str) -> str:
     return f"CAST(('0x' || substr(md5({tok}), 1, 8)) AS BIGINT)"
+
+
+def token_hash_expr(tok: str) -> str:
+    """Spark SQL text of ``token_hash`` (same expression tree, same
+    null contract), for callers that build a whole projection as one
+    string."""
+    return (
+        f"coalesce(CAST(conv(substring(md5({tok}), 1, 8), 16, 10) AS BIGINT), "
+        "CAST(0 AS BIGINT))"
+    )
 
 
 def token_hash_hi(tok: Column) -> Column:

@@ -13,10 +13,24 @@ Usage::
     agg = simhash_pairs(docs).groupBy().count()
     n_pairs = agg.collect()[0][0]
     n_candidates = lsh_candidates(agg)
+
+``driver_calls()`` measures the other side: the py4j commands the
+Python driver sends to the JVM while it builds a DataFrame, before any
+job runs::
+
+    with driver_calls() as calls:
+        df = minhash_lsh_pairs(docs)
+    print(calls.n, calls.s)
 """
 
 from __future__ import annotations
 
+import time
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
+
+from py4j.java_gateway import GatewayClient
 from pyspark.sql import DataFrame
 
 # leading join key of the banded-LSH bucket self-joins: ``band`` from
@@ -84,3 +98,40 @@ def lsh_candidates(df: DataFrame) -> int:
     if len(joins) != 1:
         raise ValueError(f"expected one band/bucket join in the executed plan, found {len(joins)}")
     return int(joins[0].metrics().apply("numOutputRows").value())
+
+
+@dataclass
+class DriverCalls:
+    """py4j commands sent inside a ``driver_calls()`` block: ``n``
+    commands taking ``s`` seconds of wall time, reply included."""
+
+    n: int = 0
+    s: float = 0.0
+
+
+@contextmanager
+def driver_calls() -> Iterator[DriverCalls]:
+    """Count the py4j commands this process sends to the JVM inside the
+    block, from every thread, and their wall time. Each Column call,
+    each eager analysis and each origin-capture set/clear is one
+    command, so the count is the driver-side cost of building a plan.
+
+    Wraps ``GatewayClient.send_command``, through which both py4j
+    client modes send every command, and restores it on exit, also when
+    the block raises. Blocks nest: each counts its own commands."""
+    calls = DriverCalls()
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        t = time.perf_counter()
+        try:
+            return send(self, *args, **kwargs)
+        finally:
+            calls.n += 1
+            calls.s += time.perf_counter() - t
+
+    GatewayClient.send_command = counted
+    try:
+        yield calls
+    finally:
+        GatewayClient.send_command = send

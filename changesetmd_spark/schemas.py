@@ -4,6 +4,40 @@ Mirrors the reference DDL (queries.py:6-33) with the nullability rules
 from README.md:206 ("all fields except for id and created_at can be
 null"; comment columns NOT NULL), plus the target image table from
 BASELINE.json input_hint.
+
+``REGISTRY`` is the catalog of the ten test tables the query registry
+reads (``entry_queries.load``), with the types Spark's own parquet
+inference gives their files:
+
+============  ==========================================================
+table         columns
+============  ==========================================================
+region        r_regionkey int, r_name string
+nation        n_nationkey int, n_name string, n_regionkey int
+customer      c_custkey bigint, c_name string, c_nationkey int,
+              c_acctbal double, c_mktsegment string
+supplier      s_suppkey bigint, s_name string, s_nationkey int,
+              s_acctbal double
+part          p_partkey bigint, p_name string, p_brand string,
+              p_type string, p_size int, p_retailprice double
+orders        o_orderkey bigint, o_custkey bigint, o_orderstatus string,
+              o_totalprice double, o_orderdate timestamp_ntz,
+              o_orderpriority string
+lineitem      l_orderkey bigint, l_partkey bigint, l_suppkey bigint,
+              l_linenumber int, l_quantity double,
+              l_extendedprice double, l_discount double, l_tax double,
+              l_returnflag string, l_linestatus string,
+              l_shipdate timestamp_ntz
+events        event_id bigint, ts timestamp_ntz, user_id bigint,
+              event_type string, value double, props string
+documents     doc_id bigint, text string, lang string, source string,
+              n_chars bigint
+embeddings    vec_id bigint, embedding array<float>, label int
+============  ==========================================================
+
+Every field is nullable, as in the files. A file may hold a subset of
+its table's columns (the generated benchmark tables do); ``load`` then
+reads only those.
 """
 
 from __future__ import annotations
@@ -12,7 +46,9 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DataType,
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     MapType,
@@ -20,6 +56,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -107,3 +144,38 @@ METRICS = StructType(
 )
 
 EMBEDDING = ArrayType(DoubleType())
+
+
+def _table(**cols: DataType) -> StructType:
+    return StructType([StructField(name, t, nullable=True) for name, t in cols.items()])
+
+
+_INT, _LONG, _DOUBLE, _STR = IntegerType(), LongType(), DoubleType(), StringType()
+
+REGISTRY: dict[str, StructType] = {
+    "region": _table(r_regionkey=_INT, r_name=_STR),
+    "nation": _table(n_nationkey=_INT, n_name=_STR, n_regionkey=_INT),
+    "customer": _table(
+        c_custkey=_LONG, c_name=_STR, c_nationkey=_INT, c_acctbal=_DOUBLE, c_mktsegment=_STR
+    ),
+    "supplier": _table(s_suppkey=_LONG, s_name=_STR, s_nationkey=_INT, s_acctbal=_DOUBLE),
+    "part": _table(
+        p_partkey=_LONG, p_name=_STR, p_brand=_STR, p_type=_STR, p_size=_INT,
+        p_retailprice=_DOUBLE,
+    ),
+    "orders": _table(
+        o_orderkey=_LONG, o_custkey=_LONG, o_orderstatus=_STR, o_totalprice=_DOUBLE,
+        o_orderdate=TimestampNTZType(), o_orderpriority=_STR,
+    ),
+    "lineitem": _table(
+        l_orderkey=_LONG, l_partkey=_LONG, l_suppkey=_LONG, l_linenumber=_INT,
+        l_quantity=_DOUBLE, l_extendedprice=_DOUBLE, l_discount=_DOUBLE, l_tax=_DOUBLE,
+        l_returnflag=_STR, l_linestatus=_STR, l_shipdate=TimestampNTZType(),
+    ),
+    "events": _table(
+        event_id=_LONG, ts=TimestampNTZType(), user_id=_LONG, event_type=_STR,
+        value=_DOUBLE, props=_STR,
+    ),
+    "documents": _table(doc_id=_LONG, text=_STR, lang=_STR, source=_STR, n_chars=_LONG),
+    "embeddings": _table(vec_id=_LONG, embedding=ArrayType(FloatType()), label=_INT),
+}

@@ -19,6 +19,8 @@ same tuned session:
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -79,7 +81,7 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # warmup=False for sessions that never run the analytical DAGs
-    # (e.g. the ingest/replication CLI): the one-time warm costs ~36 s
+    # (e.g. the ingest/replication CLI): the one-time warm costs ~46 s
     # on a 4-core host and only pays back where broadcast-join/window/
     # NLJ plans will run
     if warmup:
@@ -102,14 +104,18 @@ def _warm_codegen(spark: SparkSession) -> None:
     shapes at session build time (the warm blocks below) moves that
     cost out of every first real query — the standard
     session-warmup pattern on production clusters, where a session
-    serves many queries and first-latency matters. Cost: 36-37 s on a
-    4-core host (local[4]), paid once per session, outside any query's
-    timing but inside every caller's wall time."""
+    serves many queries and first-latency matters. Cost: ~46 s on a
+    4-core host (local[4]), paid once per session, outside any
+    query's timing but inside every caller's wall time. A block that
+    fails raises RuntimeError naming the block (and, in the registry
+    block, the gate), so the session never starts half warmed."""
     key = spark.sparkContext.applicationId
     if key in _WARMED:
         return
     _WARMED.add(key)
     from pyspark.sql import functions as F
+
+    tmp = f"/tmp/changesetmd-warm-{uuid.uuid4().hex[:8]}"  # the parquet minis
 
     # ONE warm query: a MINIATURE run of the registry's widest DAG —
     # the safe kNN join, 60 in-memory points / 3 queries. Its plan
@@ -120,7 +126,7 @@ def _warm_codegen(spark: SparkSession) -> None:
     # generated stage classes are already in the codegen cache when it
     # runs (same operator code → same expression trees; the
     # min_parallelism ckpt makes even the probe-side leaf match).
-    try:
+    def knn() -> None:
         from .operators import knn as _knn
 
         pts = spark.range(60).select(
@@ -134,17 +140,7 @@ def _warm_codegen(spark: SparkSession) -> None:
             (F.col("id").cast("double") * 40.0 - 40.0).alias("q_lon"),
         )
         _knn.knn_join_safe(qs, pts, k=2, res=2, rings=4).count()
-    except Exception:
-        pass  # warmup must never block a session
-    # second warm: miniatures of the heavy dedup DAGs over ONE tiny
-    # parquet table (scan-backed leaf, so the real gates' stage classes
-    # cache-hit). r6 sizing: 3000 DIVERSE docs instead of r5's 40 —
-    # class-loading alone left a ~1.5-2s first-invocation gap because
-    # the generated loops also need ROW VOLUME to get C2-JIT-compiled;
-    # an interleaved A/B showed the bigger mini cuts the first real
-    # minhash 3.5-4.2s → 2.2-2.4s and simhash 3.4-3.6s → 2.1s for ~4s
-    # of one-time session-build cost. Texts are made mutually dissimilar
-    # (seven varying tokens) so the mini's own candidate set stays tiny.
+
     # third warm: PRE-SPAWN the Python worker pool (r6). The multimodal
     # gates chain up to three Arrow stages over full-width partitions;
     # the first such stage forks (cores × chained-stages) Python
@@ -153,7 +149,7 @@ def _warm_codegen(spark: SparkSession) -> None:
     # (image_decode 3.7s → 1.4s with the pool warm). One trivial
     # 32-task × 3-chained mapInPandas fills the reusable pool at
     # session build, where every later Arrow stage finds idle workers.
-    try:
+    def python_workers() -> None:
         from pyspark.sql.types import LongType, StructField, StructType
 
         def _ident(it):
@@ -166,15 +162,20 @@ def _warm_codegen(spark: SparkSession) -> None:
         df.mapInPandas(_ident, _sch).mapInPandas(_ident, _sch).mapInPandas(
             _ident, _sch
         ).count()
-    except Exception:
-        pass
-    try:
-        import shutil as _shutil
-        import uuid as _uuid
 
+    # second warm: miniatures of the heavy dedup DAGs over ONE tiny
+    # parquet table (scan-backed leaf, so the real gates' stage classes
+    # cache-hit). r6 sizing: 3000 DIVERSE docs instead of r5's 40 —
+    # class-loading alone left a ~1.5-2s first-invocation gap because
+    # the generated loops also need ROW VOLUME to get C2-JIT-compiled;
+    # an interleaved A/B showed the bigger mini cuts the first real
+    # minhash 3.5-4.2s → 2.2-2.4s and simhash 3.4-3.6s → 2.1s for ~4s
+    # of one-time session-build cost. Texts are made mutually dissimilar
+    # (seven varying tokens) so the mini's own candidate set stays tiny.
+    def dedup() -> None:
         from .operators import dedup as _dedup
 
-        tp = f"/tmp/changesetmd-warm-{_uuid.uuid4().hex[:8]}"
+        tp = f"{tmp}/docs"
         spark.range(3000).select(
             F.col("id").alias("doc_id"),
             F.concat(
@@ -189,9 +190,7 @@ def _warm_codegen(spark: SparkSession) -> None:
         _dedup.simhash_pairs(docs).count()
         _dedup.minhash_lsh_pairs(docs).count()
         _dedup.ngram_jaccard_pairs(docs).count()
-        _shutil.rmtree(tp, ignore_errors=True)
-    except Exception:
-        pass
+
     # fourth warm (r6): MINIATURE runs of the registry's remaining
     # heavy DAG families — spatial compact joins, polygon half-plane
     # refine, antimeridian split, overlay, the ANN family, and the
@@ -204,13 +203,10 @@ def _warm_codegen(spark: SparkSession) -> None:
     # extended to the rest of the registry. Measured: moves ~0.3-1.5s
     # of first-invocation cost per gate out of the timed queries for a
     # one-time session-build cost of a few seconds.
-    try:
-        import shutil as _shutil
-        import uuid as _uuid
-
+    def registry() -> None:
         from . import entry_queries as _EQ
 
-        root = f"/tmp/changesetmd-warm-sf-{_uuid.uuid4().hex[:8]}"
+        root = f"{tmp}/sf"
         spark.range(1, 201).select(F.col("id").alias("o_orderkey")).repartition(
             2
         ).write.mode("overwrite").parquet(f"{root}/orders.parquet")
@@ -246,8 +242,21 @@ def _warm_codegen(spark: SparkSession) -> None:
         ):
             try:
                 _EQ.QUERIES[q](spark, root).count()
-            except Exception:
-                pass  # one mini must never block the session
-        _shutil.rmtree(root, ignore_errors=True)
-    except Exception:
-        pass
+            except Exception as e:
+                raise RuntimeError(f"registry gate {q} failed") from e
+
+    # every block fails loudly: a warm-up that silently stops half way
+    # would shift first-run cost into the timed queries unseen
+    try:
+        for name, block in (
+            ("knn", knn),
+            ("python_workers", python_workers),
+            ("dedup", dedup),
+            ("registry", registry),
+        ):
+            try:
+                block()
+            except Exception as e:
+                raise RuntimeError(f"session warm-up block {name!r} failed: {e}") from e
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -332,7 +332,7 @@ def test_embed_pair_bucket_collisions_stay_linear_on_random_corpus(spark):
     vecs = spark.createDataFrame(
         pd.DataFrame({"vec_id": range(400), "embedding": [r.tolist() for r in v]})
     )
-    q = similarity.quantized(F.col("embedding"))
+    q = F.expr(similarity.quantized("embedding"))
     keyed = vecs.select(
         F.explode(
             similarity.lsh_table_keys(
@@ -362,7 +362,7 @@ def _phash_images(docs):
 
 def _embed_buckets(vecs):
     keys = similarity.lsh_table_keys(
-        similarity.quantized(F.col("embedding")),
+        F.expr(similarity.quantized("embedding")),
         similarity.PAIR_TABLES,
         similarity.PAIR_BITS,
         similarity.PAIR_PLANE_BASE,

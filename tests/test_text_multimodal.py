@@ -39,6 +39,20 @@ def test_fingerprint_properties(spark):
     assert fps[4] == 0  # empty doc
 
 
+def test_sql_text_twins_equal_the_column_forms(spark):
+    """tokens_expr/token_hash_expr (one selectExpr string) and
+    tokens/token_hash (Column calls) are the same expressions."""
+    df = spark.createDataFrame(pd.DataFrame({"t": ["the cat  hat ", "", "  ", "straße 旧市街 0"]}))
+    got = df.select(
+        text.tokens(F.col("t")).alias("a"),
+        F.expr(text.tokens_expr("t")).alias("b"),
+        F.transform(text.tokens(F.col("t")), text.token_hash).alias("c"),
+        F.expr(f"transform({text.tokens_expr('t')}, w -> {text.token_hash_expr('w')})").alias("d"),
+    ).collect()
+    assert [(r.a, r.c) for r in got] == [(r.b, r.d) for r in got]
+    assert any(r.c for r in got)
+
+
 def test_token_and_quality_features(spark):
     df = spark.createDataFrame(pd.DataFrame({"t": ["the cat, the hat!  "]}))
     feats = text.quality_features(F.col("t"))
