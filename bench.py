@@ -9,6 +9,10 @@ against polygon envelopes → slippy-tile assignment → per-box rollup.
 Also times the headline gated queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+The session runs no warm-up, so in a full run each per-query time is
+that query's first run in the session and includes its codegen/JIT.
+The headline is the faster of two passes.
+
 Prints ONE JSON line:
   {"metric": ..., "value": <headline pipeline sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,

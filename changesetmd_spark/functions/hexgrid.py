@@ -10,8 +10,7 @@ implements an honest hexagonal grid — pointy-top hexagons in axial
 coordinates over the equirectangular (lon, lat) plane, with H3-style
 aperture-7 resolution scaling (cell size shrinks by √7 per res) — as
 *closed-form column expressions*, so cell assignment runs inside
-whole-stage codegen with zero Python. If the real ``h3`` package is
-present it can be swapped in behind the same API (see ``HAS_H3``).
+whole-stage codegen with zero Python.
 
 Cell id packing is linear in (q, r):
 
@@ -35,13 +34,6 @@ import math
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-try:  # pragma: no cover - optional accelerator, absent in this env
-    import h3 as _h3  # noqa: F401
-
-    HAS_H3 = True
-except Exception:  # pragma: no cover
-    HAS_H3 = False
 
 # res-0 hexagon circumradius in degrees; shrinks by √7 per resolution
 # (H3 aperture-7 scaling). res 7 → ~0.011° ≈ 1.2 km, comparable to H3

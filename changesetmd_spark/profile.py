@@ -30,6 +30,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from py4j import protocol
 from py4j.java_gateway import GatewayClient
 from pyspark.sql import DataFrame
 
@@ -38,6 +39,8 @@ from pyspark.sql import DataFrame
 # similarity.lsh_table_keys
 _LSH_KEYS = frozenset({"band", "bucket"})
 _JOINS = frozenset({"SortMergeJoinExec", "BroadcastHashJoinExec", "ShuffledHashJoinExec"})
+# py4j's garbage_collect_object command: release a Java object
+_MEMORY_DELETE = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
 
 def executed_nodes(df: DataFrame):
@@ -116,16 +119,23 @@ def driver_calls() -> Iterator[DriverCalls]:
     each eager analysis and each origin-capture set/clear is one
     command, so the count is the driver-side cost of building a plan.
 
+    Memory-delete commands are left out: py4j sends one when a Python
+    JavaObject is finalized, and CPython's garbage collector decides
+    when that happens, so inside a block they mostly release objects
+    built before it.
+
     Wraps ``GatewayClient.send_command``, through which both py4j
     client modes send every command, and restores it on exit, also when
     the block raises. Blocks nest: each counts its own commands."""
     calls = DriverCalls()
     send = GatewayClient.send_command
 
-    def counted(self, *args, **kwargs):
+    def counted(self, command, *args, **kwargs):
+        if command.startswith(_MEMORY_DELETE):
+            return send(self, command, *args, **kwargs)
         t = time.perf_counter()
         try:
-            return send(self, *args, **kwargs)
+            return send(self, command, *args, **kwargs)
         finally:
             calls.n += 1
             calls.s += time.perf_counter() - t

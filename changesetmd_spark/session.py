@@ -19,8 +19,6 @@ same tuned session:
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -32,14 +30,23 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    warmup: bool = True,
+    warmup: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     ``*``) so the bench harness can pin parallelism for the two-level
     scaling measurement (BASELINE.md: local[8] vs local[32]).
+
+    The session runs no warm-up: each plan shape's first run pays its
+    own codegen/JIT. ``warmup`` exists only for ``perfbench/measure.py``,
+    which passes ``warmup=False``; ``True`` raises ``ValueError``.
     """
+    if warmup:
+        raise ValueError(
+            "get_spark(warmup=True): the session warm-up was removed; "
+            "a plan's first run now pays its own codegen/JIT"
+        )
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
@@ -79,184 +86,4 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # warmup=False for sessions that never run the analytical DAGs
-    # (e.g. the ingest/replication CLI): the one-time warm costs ~46 s
-    # on a 4-core host and only pays back where broadcast-join/window/
-    # NLJ plans will run
-    if warmup:
-        _warm_codegen(spark)
-    return spark
-
-
-_WARMED: set[str] = set()
-
-
-def _warm_codegen(spark: SparkSession) -> None:
-    """One-time codegen/JIT warmup per session (VERDICT r4 item 2).
-
-    The FIRST invocation of a complex plan shape pays whole-stage
-    codegen (Catalyst rule JIT + janino compilation of the generated
-    operator classes) — measured 39 s for a cold JVM's first broadcast
-    spatial join and ~2-3 s extra on the first kNN, whose DAG is the
-    registry's widest (broadcast join + explode + two window specs +
-    hash agg). Running miniature in-memory plans of those operator
-    shapes at session build time (the warm blocks below) moves that
-    cost out of every first real query — the standard
-    session-warmup pattern on production clusters, where a session
-    serves many queries and first-latency matters. Cost: ~46 s on a
-    4-core host (local[4]), paid once per session, outside any
-    query's timing but inside every caller's wall time. A block that
-    fails raises RuntimeError naming the block (and, in the registry
-    block, the gate), so the session never starts half warmed."""
-    key = spark.sparkContext.applicationId
-    if key in _WARMED:
-        return
-    _WARMED.add(key)
-    from pyspark.sql import functions as F
-
-    tmp = f"/tmp/changesetmd-warm-{uuid.uuid4().hex[:8]}"  # the parquet minis
-
-    # ONE warm query: a MINIATURE run of the registry's widest DAG —
-    # the safe kNN join, 60 in-memory points / 3 queries. Its plan
-    # spans the operator set the whole registry leans on (broadcast
-    # hash join, explode, window row_number + filter, union,
-    # localCheckpoint, and — via the deliberately-uncertifiable polar
-    # query — the broadcast nested-loop fallback), so the real gate's
-    # generated stage classes are already in the codegen cache when it
-    # runs (same operator code → same expression trees; the
-    # min_parallelism ckpt makes even the probe-side leaf match).
-    def knn() -> None:
-        from .operators import knn as _knn
-
-        pts = spark.range(60).select(
-            F.col("id").alias("point_id"),
-            ((F.col("id") % 18).cast("double") * 9.0 - 76.0).alias("lat"),
-            ((F.col("id") % 36).cast("double") * 9.5 - 166.0).alias("lon"),
-        )
-        qs = spark.range(3).select(
-            F.col("id").alias("query_id"),
-            F.when(F.col("id") == 0, 85.0).otherwise(F.col("id").cast("double") * 25.0 - 40.0).alias("q_lat"),
-            (F.col("id").cast("double") * 40.0 - 40.0).alias("q_lon"),
-        )
-        _knn.knn_join_safe(qs, pts, k=2, res=2, rings=4).count()
-
-    # third warm: PRE-SPAWN the Python worker pool (r6). The multimodal
-    # gates chain up to three Arrow stages over full-width partitions;
-    # the first such stage forks (cores × chained-stages) Python
-    # workers, each importing numpy/pandas on first use — measured
-    # ~2.5s of import storm landing inside whatever gate runs first
-    # (image_decode 3.7s → 1.4s with the pool warm). One trivial
-    # 32-task × 3-chained mapInPandas fills the reusable pool at
-    # session build, where every later Arrow stage finds idle workers.
-    def python_workers() -> None:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        def _ident(it):
-            yield from it
-
-        _sch = StructType([StructField("v", LongType())])
-        df = spark.range(0, 64, 1, spark.sparkContext.defaultParallelism).select(
-            F.col("id").alias("v")
-        )
-        df.mapInPandas(_ident, _sch).mapInPandas(_ident, _sch).mapInPandas(
-            _ident, _sch
-        ).count()
-
-    # second warm: miniatures of the heavy dedup DAGs over ONE tiny
-    # parquet table (scan-backed leaf, so the real gates' stage classes
-    # cache-hit). r6 sizing: 3000 DIVERSE docs instead of r5's 40 —
-    # class-loading alone left a ~1.5-2s first-invocation gap because
-    # the generated loops also need ROW VOLUME to get C2-JIT-compiled;
-    # an interleaved A/B showed the bigger mini cuts the first real
-    # minhash 3.5-4.2s → 2.2-2.4s and simhash 3.4-3.6s → 2.1s for ~4s
-    # of one-time session-build cost. Texts are made mutually dissimilar
-    # (seven varying tokens) so the mini's own candidate set stays tiny.
-    def dedup() -> None:
-        from .operators import dedup as _dedup
-
-        tp = f"{tmp}/docs"
-        spark.range(3000).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.lit("t"), F.col("id"),
-                F.lit(" a"), F.col("id") % 97, F.lit(" b"), F.col("id") % 89,
-                F.lit(" c"), F.col("id") % 83, F.lit(" d"), F.col("id") % 79,
-                F.lit(" e"), F.col("id") % 71, F.lit(" f"), F.col("id") % 67,
-                F.lit(" g"), F.col("id") % 61,
-            ).alias("text"),
-        ).repartition(4).write.mode("overwrite").parquet(tp)
-        docs = spark.read.parquet(tp)
-        _dedup.simhash_pairs(docs).count()
-        _dedup.minhash_lsh_pairs(docs).count()
-        _dedup.ngram_jaccard_pairs(docs).count()
-
-    # fourth warm (r6): MINIATURE runs of the registry's remaining
-    # heavy DAG families — spatial compact joins, polygon half-plane
-    # refine, antimeridian split, overlay, the ANN family, and the
-    # Arrow multimodal chains — against a ~200-row temp table set with
-    # the REAL table/column shapes, driven through the registry's own
-    # gate functions. Same code path ⇒ same generated stage classes, so
-    # the first real invocation of each gate finds its whole-stage
-    # codegen (and Python UDF pickles) already cached — the same
-    # session-warmup pattern the knn/dedup minis established in r4/r5,
-    # extended to the rest of the registry. Measured: moves ~0.3-1.5s
-    # of first-invocation cost per gate out of the timed queries for a
-    # one-time session-build cost of a few seconds.
-    def registry() -> None:
-        from . import entry_queries as _EQ
-
-        root = f"{tmp}/sf"
-        spark.range(1, 201).select(F.col("id").alias("o_orderkey")).repartition(
-            2
-        ).write.mode("overwrite").parquet(f"{root}/orders.parquet")
-        spark.range(1, 61).select(F.col("id").alias("c_custkey")).repartition(
-            2
-        ).write.mode("overwrite").parquet(f"{root}/customer.parquet")
-        spark.range(1, 41).select(F.col("id").alias("s_suppkey")).repartition(
-            2
-        ).write.mode("overwrite").parquet(f"{root}/supplier.parquet")
-        spark.range(30).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(1, 64),"
-                " j -> cast(pmod(id * j * 48271, 997) / 997.0 - 0.5 as float))"
-            ).alias("embedding"),
-        ).repartition(2).write.mode("overwrite").parquet(f"{root}/embeddings.parquet")
-        for q in (
-            "spatial_contains_count",
-            "polygon_contains",
-            "spatial_wrap",
-            "tile_overlay",
-            "hex_rollup",
-            "cosine_topk",
-            "ann_lsh",
-            "ann_multiprobe",
-            "ann_ivf",
-            "embed_neardup",
-            "phash_neardup",
-            "image_decode",
-            "image_embed",
-            "video_frames",
-            "audio_features",
-        ):
-            try:
-                _EQ.QUERIES[q](spark, root).count()
-            except Exception as e:
-                raise RuntimeError(f"registry gate {q} failed") from e
-
-    # every block fails loudly: a warm-up that silently stops half way
-    # would shift first-run cost into the timed queries unseen
-    try:
-        for name, block in (
-            ("knn", knn),
-            ("python_workers", python_workers),
-            ("dedup", dedup),
-            ("registry", registry),
-        ):
-            try:
-                block()
-            except Exception as e:
-                raise RuntimeError(f"session warm-up block {name!r} failed: {e}") from e
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return builder.getOrCreate()

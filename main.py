@@ -86,12 +86,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     owns_session = SparkSession.getActiveSession() is None
-    # ingest/maintenance commands never run the analytical DAGs, so
-    # they skip the session codegen warmup; `query` keeps it (it may
-    # run the registry's widest plans)
-    spark = get_spark(
-        app_name=f"changesetmd-{args.cmd}", warmup=(args.cmd == "query")
-    )
+    spark = get_spark(app_name=f"changesetmd-{args.cmd}")
     try:
         if args.cmd == "query":
             df = EQ.QUERIES[args.name](spark, args.sf_dir)

@@ -4,7 +4,9 @@
 
 from __future__ import annotations
 
+import gc
 import os
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -45,6 +47,39 @@ def test_driver_calls_counts_inside_the_block_and_restores_on_raise(spark):
             1 / 0
     assert failed.n > 0
     assert GatewayClient.send_command is send
+
+
+def _wait_for_py4j_finalizers(spark) -> None:
+    """Return once py4j's finalizer thread has sent every memory-delete
+    command queued so far: it takes tasks in order, so a marker queued
+    last runs after all of them."""
+    done = threading.Event()
+
+    class Marker:
+        def garbage_collect_object(self, target_id, enqueue):
+            done.set()
+
+    spark.sparkContext._gateway._gateway_client.finalizer_deque.appendleft((Marker(), None))
+    assert done.wait(10), "py4j finalizer thread did not drain"
+
+
+def test_driver_calls_leaves_out_gc_detaches_of_earlier_objects(spark):
+    def build():
+        spark.range(3).selectExpr("id + 1 AS x")
+
+    build()
+    with profile.driver_calls() as quiet:
+        build()
+    # Java objects in reference cycles: only a collector pass frees them
+    junk = [[spark._jvm.java.util.ArrayList()] for _ in range(200)]
+    for cell in junk:
+        cell.append(cell)
+    del junk, cell
+    with profile.driver_calls() as collected:
+        build()
+        assert gc.collect() >= 200
+        _wait_for_py4j_finalizers(spark)
+    assert collected.n == quiet.n
 
 
 @pytest.mark.parametrize("gate", sorted(BUILD_BUDGET))

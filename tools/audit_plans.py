@@ -59,7 +59,7 @@ def main() -> int:
         "pushed filters; then the gate's second build in the session:",
         "py4j round trips sent while building its DataFrame and their",
         "wall ms (any job the build runs, e.g. a centroid collect or a",
-        "checkpoint, counts too).",
+        "checkpoint, counts too; py4j's memory-delete commands do not).",
         "",
         "| query | BHJ | SHJ | SMJ | NLJ | shuffles | py-eval | partial aggs | pushed-filter scans"
         " | build round trips | build ms |",

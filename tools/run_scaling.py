@@ -320,7 +320,7 @@ per-operator efficiency here is a LOWER bound; the same
 DRAM-saturation caveat as the headline ladder applies (see Analysis
 above). merge_upsert additionally serializes on its four snapshot
 COMMITS by design (each delta write is a barrier; the log append
-itself is ~1 ms, measured by tools/merge_profile.py) — the
+itself is ~1 ms) — the
 Iceberg-catalog analog on a real cluster.
 """
     scaled = _load(os.path.join(REPO, "BENCH", "scaling_queries_scaled.json"))
