@@ -118,7 +118,7 @@ def main() -> None:
         geo.clamp_lat(geo.phash_to_lat(F.col("phash"))).alias("lat"),
         geo.phash_to_lon(F.col("phash")).alias("lon"),
     )
-    joined = sj.contains_join(slim, boxes, res=3, broadcast_boxes=True, compact_build=True)
+    joined = sj.contains_join(slim, boxes, res=3)
     stages = {
         "scan_geotag": slim,
         "cover_join": joined,

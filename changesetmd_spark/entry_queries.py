@@ -187,12 +187,10 @@ def q_spatial_contains_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         points_from_orders(load(spark, sf_dir, "orders"))
     )
     boxes = boxes_from_customer(load(spark, sf_dir, "customer"))
-    # compact_build (r6): broadcast only (hex_cell, box_id) pairs and
-    # refine via a second broadcast join on the raw box table — the
-    # same plan the headline pipeline ships; ~3× smaller build relation
-    pairs = sj.contains_join(
-        points, boxes, res=3, broadcast_boxes=True, compact_build=True
-    )
+    # the cover join broadcasts only (hex_cell, box_id) pairs, then
+    # refines via a second broadcast join on the raw box table — the
+    # same plan the headline pipeline ships
+    pairs = sj.contains_join(points, boxes, res=3)
     return pairs.groupBy("box_id").agg(F.count("*").alias("n_points"))
 
 
@@ -202,9 +200,7 @@ def q_spatial_contains_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         points_from_orders(load(spark, sf_dir, "orders"))
     )
     boxes = boxes_from_customer(load(spark, sf_dir, "customer"))
-    return sj.contains_join(
-        points, boxes, res=3, broadcast_boxes=True, compact_build=True
-    ).select("point_id", "box_id")
+    return sj.contains_join(points, boxes, res=3).select("point_id", "box_id")
 
 
 def q_spatial_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,8 +210,7 @@ def q_spatial_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     boxes = boxes_from_customer(load(spark, sf_dir, "customer"))
     pairs = sj.contains_join(
-        points, boxes, res=3, broadcast_boxes=False,
-        salt_buckets=8, point_salt_key="point_id",
+        points, boxes, res=3, salt_buckets=8, point_salt_key="point_id"
     )
     return pairs.groupBy("box_id").agg(F.count("*").alias("n_points"))
 
@@ -254,18 +249,18 @@ def q_spatial_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Antimeridian containment gate: wrapping boxes (min_lon >
     max_lon ⇒ crosses ±180°) split into non-wrapping halves
     (split_antimeridian), then the standard cell-cover containment
-    join. Oracle: direct OR-condition wraparound predicate — so the
-    split+join path is verified against the straight geographic
-    semantics."""
+    join. Each half carries its own key (2·box_id + half), so the
+    count groups by the original id, ``box_id >> 1``. Oracle: direct
+    OR-condition wraparound predicate — so the split+join path is
+    verified against the straight geographic semantics."""
     points = plan_strategy.widen_if_narrow(
         points_from_orders(load(spark, sf_dir, "orders"))
     )
     wboxes = wrapping_boxes_from_supplier(load(spark, sf_dir, "supplier"))
-    halves = sj.split_antimeridian(wboxes)
-    pairs = sj.contains_join(
-        points, halves, res=3, broadcast_boxes=True, normalize=False
+    pairs = sj.contains_join(points, sj.split_antimeridian(wboxes), res=3)
+    return pairs.groupBy(F.shiftright("box_id", 1).alias("box_id")).agg(
+        F.count("*").alias("n_points")
     )
-    return pairs.groupBy("box_id").agg(F.count("*").alias("n_points"))
 
 
 def q_count_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,7 +410,7 @@ def q_tile_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster-tile ↔ vector-bbox overlay: intersecting box pairs."""
     a = boxes_from_customer(load(spark, sf_dir, "customer"))
     b = boxes_from_supplier(load(spark, sf_dir, "supplier"))
-    out = overlay_ops.overlay_join(a, b, zoom=6, broadcast_b=True)
+    out = overlay_ops.overlay_join(a, b, zoom=6)
     return out.select(F.col("a_box_id").alias("cust_box"), F.col("b_box_id").alias("supp_box"))
 
 
@@ -1262,7 +1257,7 @@ FROM customer WHERE c_custkey % 5 = 0
 
 def q_polygon_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE point-in-polygon join (convex hexagonal query polygons,
-    half-plane refine inside the cell join) — the generalization of
+    cell-cover join, then the half-plane refine) — the generalization of
     B4 beyond envelopes. Oracle: identical cross-product predicate in
     SQL over the same derived polygons."""
     from .operators import polygon_join as pj
@@ -1271,10 +1266,7 @@ def q_polygon_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
         points_from_orders(load(spark, sf_dir, "orders"))
     )
     polys = polygons_from_customer(load(spark, sf_dir, "customer"))
-    pairs = pj.polygon_contains_join(
-        points, polys, n_vertices=6, res=3, broadcast_polygons=True,
-        compact_build=True,
-    )
+    pairs = pj.polygon_contains_join(points, polys, n_vertices=6, res=3)
     return pairs.groupBy("poly_id").agg(F.count("*").alias("n_points"))
 
 

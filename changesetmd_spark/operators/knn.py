@@ -10,10 +10,11 @@ Two implementations, one semantic:
   its ``grid_disk(cell, rings)`` hex cells; candidates equi-join on
   cell; haversine + ``row_number() ≤ k`` pick winners per query.
   Cost: |queries|·(1+3r(r+1)) join keys — independent of the big-table
-  size, shuffle partitioned by cell. EXACT iff the true k-th neighbor
-  lies within the ring radius; ``min_ring_guarantee_km`` documents the
-  radius the chosen (res, rings) guarantees, and the property test
-  compares against the exact oracle.
+  size, and broadcast, so the point side is never shuffled. EXACT iff
+  the true k-th neighbor lies within the ring radius;
+  ``min_ring_guarantee_km`` documents the radius the chosen (res,
+  rings) guarantees, and the property test compares against the exact
+  oracle.
 - ``knn_join_exact`` (the oracle path): broadcast cross join + window.
   Right when the query side is small (it is broadcast); used by tests
   and the DuckDB-gated query at sf0.01.
@@ -30,7 +31,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import geo, hexgrid
-from ..plans import strategy
 
 
 def _topk(
@@ -90,7 +90,6 @@ def knn_join_rings(
     p_id: str = "point_id",
     p_lat: str = "lat",
     p_lon: str = "lon",
-    broadcast_queries: bool | None = None,
     min_parallelism: int | None = None,
     polar_lat: float = POLAR_LAT_DEG,
 ) -> DataFrame:
@@ -146,8 +145,7 @@ def knn_join_rings(
     p = points.withColumn(
         "hex_cell", hexgrid.hex_cell(geo.clamp_lat(F.col(p_lat)), F.col(p_lon), res)
     )
-    q = strategy.maybe_broadcast(q, hint=broadcast_queries)
-    pairs = p.join(q, "hex_cell").withColumn(
+    pairs = p.join(F.broadcast(q), "hex_cell").withColumn(
         "dist_km",
         geo.haversine_km(F.col(q_lat), F.col(q_lon), F.col(p_lat), F.col(p_lon)),
     )
@@ -222,7 +220,6 @@ def knn_join_safe(
         knn_join_rings(
             queries, points, k, res=res, rings=rings,
             q_id=q_id, q_lat=q_lat, q_lon=q_lon, p_id=p_id, p_lat=p_lat, p_lon=p_lon,
-            broadcast_queries=True,
         )
         .withColumn("_g", guarantee)
         .localCheckpoint()

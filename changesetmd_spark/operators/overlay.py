@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
-from ..plans import strategy
 from .spatial_join import normalize_boxes
 
 
@@ -46,27 +45,17 @@ def tiles_for_boxes(
     )
 
 
-def points_to_tiles(
-    points: DataFrame, zoom: int, *, lat: str = "lat", lon: str = "lon",
-    out: str = "tile",
-) -> DataFrame:
-    return points.withColumn(
-        out,
-        geo.tile_id(geo.tile_x(F.col(lon), zoom), geo.tile_y(F.col(lat), zoom), zoom),
-    )
-
-
 def overlay_join(
     boxes_a: DataFrame,
     boxes_b: DataFrame,
     zoom: int,
     *,
-    broadcast_b: bool | None = None,
     a_prefix: str = "a_",
     b_prefix: str = "b_",
 ) -> DataFrame:
-    """All intersecting (a, b) box pairs: tile equi-join + exact
-    overlap refine. Column names get prefixed to avoid collisions.
+    """All intersecting (a, b) box pairs: tile equi-join against the
+    broadcast ``boxes_b`` tiles + exact overlap refine. Column names
+    get prefixed to avoid collisions.
     Pair-dedup note: unlike the point case, a box pair CAN meet in
     several tiles → full-row ``dropDuplicates`` after refine (cheap:
     refined output ≪ candidates)."""
@@ -86,8 +75,7 @@ def overlay_join(
         min_lat=b_prefix + "min_lat", max_lat=b_prefix + "max_lat",
         min_lon=b_prefix + "min_lon", max_lon=b_prefix + "max_lon",
     )
-    bt = strategy.maybe_broadcast(bt, hint=broadcast_b)
-    refined = at.join(bt, "tile").filter(
+    refined = at.join(F.broadcast(bt), "tile").filter(
         geo.boxes_overlap(
             F.col(a_prefix + "min_lat"), F.col(a_prefix + "max_lat"),
             F.col(a_prefix + "min_lon"), F.col(a_prefix + "max_lon"),

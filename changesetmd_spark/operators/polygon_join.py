@@ -3,14 +3,14 @@
 The reference's geometry column is always a bbox envelope
 (ST_MakeEnvelope, changesetmd.py:166), but its query surface is the
 generic ``ST_CoveredBy(geom, geom)`` (README.md:232-234) — this
-operator closes that gap for CONVEX query polygons:
+operator closes that gap for CONVEX query polygons.
 
-  phase 1 (coarse): polygon → bounding box → hex-cell cover → the same
-    broadcast/shuffle cell equi-join as the flagship operator;
-  phase 2 (refine): exact half-plane test per edge, evaluated as pure
-    column expressions inside the join — for a CCW convex polygon,
-    point p is inside iff cross(v_i→v_{i+1}, v_i→p) ≥ 0 for every
-    edge (boundary counts as inside, PostGIS ST_Covers convention).
+``polygon_contains_join`` is the flagship's two-phase
+``spatial_join.cover_join`` with two swaps: the cover comes from the
+polygon's bounding box, and the refine is the exact half-plane test per
+edge, as pure column expressions — for a CCW convex polygon, point p is
+inside iff cross(v_i→v_{i+1}, v_i→p) ≥ 0 for every edge (boundary
+counts as inside, PostGIS ST_Covers convention).
 
 No geometry library needed; the predicate is exact double arithmetic
 and therefore cross-engine reproducible (the DuckDB oracle uses the
@@ -27,8 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import geo, hexgrid
-from ..plans import strategy
+from .spatial_join import cover_join
 
 
 def polygon_bbox(xs: Column, ys: Column) -> tuple[Column, Column, Column, Column]:
@@ -81,46 +80,17 @@ def polygon_contains_join(
     res: int = 3,
     lat: str = "lat",
     lon: str = "lon",
-    broadcast_polygons: bool | None = None,
-    compact_build: bool = False,
 ) -> DataFrame:
     """Inner join of points with every convex polygon containing them.
-    ``polygons`` needs (poly_id, xs, ys); same two-phase shape as the
-    flagship envelope join, refine swapped for the half-plane test.
-
-    ``compact_build`` (broadcast path only, r6): broadcast just the
-    (hex_cell, poly_id) cover pairs — the vertex ARRAYS stay out of
-    the exploded build relation — and refine via a second broadcast
-    join on the raw polygon table (requires unique poly_id, which the
-    one-row-per-polygon encoding guarantees). Same result set: a point
-    meets a polygon's cover in at most one cell, so the (point,
-    poly_id) candidate set is identical to the direct join's."""
-    pts = points.withColumn(
-        "hex_cell", hexgrid.hex_cell(geo.clamp_lat(F.col(lat)), F.col(lon), res)
+    ``polygons`` needs (poly_id, xs, ys), one row per ``poly_id``: the
+    ``cover_join`` of the polygons' bounding boxes, refined by the
+    half-plane test. The vertex arrays stay out of the exploded cover."""
+    xs, ys = F.col("xs"), F.col("ys")
+    return cover_join(
+        points, polygons, "poly_id", polygon_bbox(xs, ys),
+        point_in_convex_polygon(F.col(lon), F.col(lat), xs, ys, n_vertices),
+        res=res, lat=lat, lon=lon,
     )
-    b_min_lat, b_max_lat, b_min_lon, b_max_lon = polygon_bbox(F.col("xs"), F.col("ys"))
-    cov = polygons.withColumn(
-        "hex_cell",
-        F.explode(hexgrid.hex_cell_cover(b_min_lat, b_max_lat, b_min_lon, b_max_lon, res)),
-    )
-    if compact_build:
-        if broadcast_polygons is False:
-            raise ValueError("compact_build is a broadcast-path optimization")
-        if "poly_id" not in polygons.columns:
-            raise ValueError("compact_build requires a poly_id key column")
-        cand = pts.join(F.broadcast(cov.select("poly_id", "hex_cell")), "hex_cell")
-        refined = cand.join(F.broadcast(polygons), "poly_id").filter(
-            point_in_convex_polygon(
-                F.col(lon), F.col(lat), F.col("xs"), F.col("ys"), n_vertices
-            )
-        )
-        return refined.drop("hex_cell")
-    cov = strategy.maybe_broadcast(cov, hint=broadcast_polygons)
-    refine = point_in_convex_polygon(
-        pts[lon], pts[lat], cov["xs"], cov["ys"], n_vertices
-    )
-    joined = pts.join(cov, (pts["hex_cell"] == cov["hex_cell"]) & refine, "inner")
-    return joined.drop(pts["hex_cell"]).drop(cov["hex_cell"])
 
 
 def polygon_area_q(xs: Column, ys: Column, n_vertices: int, quant: int = 10**6) -> Column:

@@ -1,35 +1,35 @@
 """Spatial containment join — the engine's flagship operator.
 
 Generalizes the reference's ``ST_CoveredBy`` cookbook query
-(README.md:232-234, backed by the GiST index queries.py:57-59) into a
-Spark-native two-phase join (SURVEY.md §2.b B4):
+(README.md:232-234, backed by the GiST index queries.py:57-59) into one
+Spark-native two-phase join, ``cover_join`` (SURVEY.md §2.b B4):
 
-  phase 1 (coarse): boxes → hex-cell covers (``hex_cell_cover``,
-    array<long>) → ``explode`` → hash equi-join against the points'
-    single ``hex_cell`` id. This is the index probe; the GiST tree is
-    replaced by shuffle-or-broadcast hash partitioning on cell id.
-  phase 2 (refine): exact interval containment evaluated *inside the
-    join condition*, so false cover candidates die before leaving the
-    join operator.
+  phase 1 (filter): each shape → its hex-cell cover (``hex_cell_cover``)
+    → slim (key, hex_cell) pairs → hash equi-join with the points' one
+    ``hex_cell`` id. This is the index probe, the GiST tree replaced by
+    hashing on cell id; its output rows are the candidates.
+  phase 2 (refine): the candidates join the raw shape table on the key
+    and keep the exact matches. Box bounds and polygon vertex arrays
+    never enter the exploded cover.
+
+``contains_join`` refines with ``geo.point_in_box``;
+``polygon_join.polygon_contains_join`` runs the same join with a
+polygon's bounding box and half-plane test.
 
 Correctness notes:
 - A point maps to exactly one cell and a cover lists each cell once,
-  so a (point, box) pair can meet in at most one cell → **no distinct
-  / dedup shuffle is needed** (proved by test_spatial_join.py against
-  a brute-force oracle).
+  so a (point, key) pair meets in at most one cell → **no distinct /
+  dedup shuffle is needed** (proved by test_spatial_join.py against a
+  brute-force oracle), given one shape row per key.
 - Boxes are normalized first (lat clamp + min/max swap) — the engine's
   ``ST_MakeValid`` (changesetmd.py:166, README.md:187-188).
 
-Scale notes (the 100 TB plan):
-- Callers must pass SLIM inputs: (point_id, lat, lon) and
-  (box_id, bounds). Binary image payloads never enter this operator;
-  re-attach by key afterwards (SURVEY.md §4, rule #1). A helper for
-  the full images pipeline lives in ``assign_images``.
-- ``broadcast`` hint: query polygon sets are usually ≪ the image table
-  → broadcast the exploded cover and the join is shuffle-free (map-side
-  hash join; verified by .explain in tests).
-- ``salt_buckets``: for non-broadcast joins with hot cells, salt the
-  point side and explode the cover side (plans/strategy.py).
+Scale notes (the 100 TB plan): callers pass SLIM inputs, (point_id,
+lat, lon) and (box_id, bounds). Binary image payloads never enter this
+operator; re-attach by key afterwards (SURVEY.md §4, rule #1;
+``assign_images``). Query shape sets are ≪ the image table, so by
+default both joins broadcast the shape side and the points are never
+shuffled; ``salt_buckets`` is the shuffle path for hot cells.
 """
 
 from __future__ import annotations
@@ -69,34 +69,31 @@ def normalize_boxes(
     )
 
 
-def split_antimeridian(
-    boxes: DataFrame,
-    min_lat: str = "min_lat",
-    max_lat: str = "max_lat",
-    min_lon: str = "min_lon",
-    max_lon: str = "max_lon",
-) -> DataFrame:
+def split_antimeridian(boxes: DataFrame) -> DataFrame:
     """Antimeridian support: a box given with ``min_lon > max_lon``
     WRAPS across ±180° (the geographic convention; the reference's
     ST_MakeValid instead swaps the edges, which silently turns a
     narrow Pacific box into its world-wide complement). Each wrapping
-    box is split into its two non-wrapping halves
-    ``[min_lon, 180]`` and ``[−180, max_lon]`` — same box_id — so every
-    downstream operator (cover join, overlay, area) works unchanged.
+    box is split into its two non-wrapping halves ``[min_lon, 180]``
+    and ``[−180, max_lon]``, so the cover join works unchanged.
+
+    Each output row gets its own ``box_id``: 2·box_id for the east half
+    (or a box that does not wrap), 2·box_id + 1 for the west half. That
+    keeps ``contains_join``'s unique-key contract — the halves' covers
+    can share cells — and ``box_id >> 1`` gives back the original id.
     The halves are disjoint in lon, so a point still matches a box at
-    most once: no dedup shuffle is introduced. Non-wrapping boxes pass
-    through untouched; the transform is a narrow union, no shuffle."""
-    wrap = F.col(min_lon) > F.col(max_lon)
+    most once: no dedup shuffle is introduced. The transform is a
+    narrow union, no shuffle."""
+    wrap = F.col("min_lon") > F.col("max_lon")
     east = boxes.withColumn(
-        "_mx", F.when(wrap, F.lit(180.0)).otherwise(F.col(max_lon))
-    ).drop(max_lon).withColumnRenamed("_mx", max_lon)
+        "max_lon", F.when(wrap, F.lit(180.0)).otherwise(F.col("max_lon"))
+    ).withColumn("box_id", F.col("box_id") * 2)
     west = (
         boxes.filter(wrap)
-        .withColumn("_mn", F.lit(-180.0))
-        .drop(min_lon)
-        .withColumnRenamed("_mn", min_lon)
+        .withColumn("min_lon", F.lit(-180.0))
+        .withColumn("box_id", F.col("box_id") * 2 + 1)
     )
-    return east.unionByName(west.select(east.columns))
+    return east.unionByName(west)
 
 
 def tile_points(
@@ -129,6 +126,50 @@ def cover_boxes(
     )
 
 
+def cover_join(
+    points: DataFrame,
+    shapes: DataFrame,
+    key: str,
+    bounds: tuple[Column, Column, Column, Column],
+    refine: Column,
+    *,
+    res: int,
+    lat: str,
+    lon: str,
+    salt_buckets: int = 0,
+    point_salt_key: str | None = None,
+) -> DataFrame:
+    """Points joined with every shape passing ``refine``, the exact
+    test over point and shape columns; ``bounds`` are (min_lat, max_lat,
+    min_lon, max_lon) over ``shapes``. Returns points + shapes columns.
+
+    ``key`` must be unique in ``shapes``: phase 2 joins on it, so a key
+    on two rows crosses each candidate with both and duplicates matches.
+
+    By default both joins broadcast the shape side. ``salt_buckets>0``
+    (needs ``point_salt_key``) makes phase 1 a salted shuffled hash join
+    on (hex_cell, _salt) and leaves phase 2 unhinted."""
+    pts = tile_points(points, lat=lat, lon=lon, res=res)
+    cov = shapes.withColumn(
+        "hex_cell", F.explode(hexgrid.hex_cell_cover(*bounds, res))
+    ).select(key, "hex_cell")
+    if salt_buckets > 0:
+        if point_salt_key is None:
+            raise ValueError("salt_buckets needs point_salt_key")
+        pts = strategy.with_salt(pts, point_salt_key, salt_buckets)
+        # shuffle-hash, not sort-merge: the exploded cover side hashes
+        # per partition (covers/shuffle_partitions rows — bounded), so
+        # sorting the BIG point side — SMJ's dominant cost — is pure
+        # waste. Measured 2.3x faster at sf0.1/local[32] (14s → 5-6s),
+        # identical row set; skew is already handled by the salt.
+        cov = strategy.explode_salt(cov, salt_buckets).hint("shuffle_hash")
+        cand = pts.join(cov, ["hex_cell", "_salt"]).drop("_salt")
+    else:
+        cand = pts.join(F.broadcast(cov), "hex_cell")
+        shapes = F.broadcast(shapes)
+    return cand.join(shapes, key).filter(refine).drop("hex_cell")
+
+
 def contains_join(
     points: DataFrame,
     boxes: DataFrame,
@@ -136,79 +177,33 @@ def contains_join(
     res: int = DEFAULT_RES,
     lat: str = "lat",
     lon: str = "lon",
-    broadcast_boxes: bool | None = None,
     salt_buckets: int = 0,
     point_salt_key: str | None = None,
-    normalize: bool = True,
-    compact_build: bool = False,
+    broadcast_boxes: bool = True,
+    compact_build: bool = True,
 ) -> DataFrame:
-    """Inner join of points with every box that contains them.
+    """Inner join of points with every box that contains them: the
+    ``cover_join`` of the normalized boxes, refined by
+    ``geo.point_in_box``. ``boxes`` needs a unique ``box_id``.
 
-    Returns points columns + boxes columns (cell/salt helpers dropped).
-    ``broadcast_boxes=None`` probes the box side size (strategy module);
-    ``salt_buckets>0`` salts the shuffle (needs ``point_salt_key``).
-    ``compact_build`` (broadcast path only): broadcast just
-    (hex_cell, box_id) pairs — ~3× smaller build relation, better
-    cache behavior on wide-core machines — and refine via a second
-    broadcast join on the raw (unexploded) box table. Same result set
-    (verified against the brute-force oracle); measured ~15-20% faster
-    at 32 cores on the bench workload. REQUIRES unique box_id rows:
-    with duplicate ids (e.g. antimeridian split halves) the re-join on
-    box_id would cross-match a candidate with every same-id row and
-    duplicate pairs — those callers use the direct path.
+    Returns points columns + boxes columns. ``salt_buckets>0`` salts
+    the cell join (needs ``point_salt_key``). ``broadcast_boxes`` and
+    ``compact_build`` are kept for existing callers only; ``True`` is
+    their one legal value and any other raises ``ValueError``.
     """
-    if normalize:
-        boxes = normalize_boxes(boxes)
-    if compact_build:
-        if salt_buckets:
-            raise ValueError("compact_build is a broadcast-path optimization")
-        if "box_id" not in boxes.columns:
-            raise ValueError("compact_build requires a box_id key column")
-        pts = tile_points(points, lat=lat, lon=lon, res=res)
-        cov = cover_boxes(
-            boxes.select("box_id", "min_lat", "max_lat", "min_lon", "max_lon"),
-            res=res,
-        ).select("box_id", "hex_cell")
-        cand = pts.join(F.broadcast(cov), "hex_cell")
-        refined = cand.join(F.broadcast(boxes), "box_id").filter(
-            geo.point_in_box(
-                F.col(lat), F.col(lon),
-                F.col("min_lat"), F.col("max_lat"), F.col("min_lon"), F.col("max_lon"),
-            )
+    if broadcast_boxes is not True or compact_build is not True:
+        raise ValueError(
+            "contains_join(broadcast_boxes=, compact_build=): the direct "
+            "and unhinted plans were removed; use salt_buckets for a shuffle"
         )
-        return refined.drop("hex_cell")
-    pts = tile_points(points, lat=lat, lon=lon, res=res)
-    cov = cover_boxes(boxes, res=res)
-
-    join_keys = [pts["hex_cell"] == cov["hex_cell"]]
-    if salt_buckets > 0:
-        if broadcast_boxes:
-            raise ValueError("salting is pointless for a broadcast join")
-        if point_salt_key is None:
-            raise ValueError("salt_buckets needs point_salt_key")
-        pts = strategy.with_salt(pts, point_salt_key, salt_buckets)
-        cov = strategy.explode_salt(cov, salt_buckets)
-        join_keys.append(pts["_salt"] == cov["_salt"])
-        # shuffle-hash, not sort-merge: the exploded cover side hashes
-        # per partition (covers/shuffle_partitions rows — bounded), so
-        # sorting the BIG point side — SMJ's dominant cost — is pure
-        # waste. Measured 2.3x faster at sf0.1/local[32] (14s → 5-6s),
-        # identical row set; skew is already handled by the salt.
-        cov = cov.hint("shuffle_hash")
-
-    refine = geo.point_in_box(
-        pts[lat], pts[lon],
-        cov["min_lat"], cov["max_lat"], cov["min_lon"], cov["max_lon"],
+    boxes = normalize_boxes(boxes)
+    box = tuple(F.col(c) for c in ("min_lat", "max_lat", "min_lon", "max_lon"))
+    return cover_join(
+        points, boxes, "box_id", box,
+        geo.point_in_box(F.col(lat), F.col(lon), *box),
+        res=res, lat=lat, lon=lon,
+        salt_buckets=salt_buckets, point_salt_key=point_salt_key,
     )
-    cov = strategy.maybe_broadcast(cov, hint=broadcast_boxes)
-    cond = join_keys[0]
-    for k in join_keys[1:]:
-        cond = cond & k
-    joined = pts.join(cov, cond & refine, "inner")
-    drop_cols = [pts["hex_cell"], cov["hex_cell"]]
-    if salt_buckets > 0:
-        drop_cols += [pts["_salt"], cov["_salt"]]
-    return joined.drop(*drop_cols)
 
 
 def assign_images(
@@ -216,7 +211,6 @@ def assign_images(
     boxes: DataFrame,
     *,
     res: int = DEFAULT_RES,
-    broadcast_boxes: bool | None = None,
     keep_payload: bool = False,
 ) -> DataFrame:
     """Full image pipeline: phash → geotag → clamp → cell → containment
@@ -232,9 +226,7 @@ def assign_images(
         geo.clamp_lat(geo.phash_to_lat(F.col("phash"))).alias("lat"),
         geo.phash_to_lon(F.col("phash")).alias("lon"),
     )
-    matched = contains_join(
-        slim, boxes, res=res, broadcast_boxes=broadcast_boxes
-    )
+    matched = contains_join(slim, boxes, res=res)
     if keep_payload:
         matched = matched.join(images, "image_id")
     return matched

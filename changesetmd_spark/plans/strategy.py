@@ -1,41 +1,26 @@
-"""Broadcast-vs-shuffle selection + explicit hot-key salting.
+"""Explicit hot-key salting, and widening of narrow scans.
 
 The reference delegates all join planning to the Postgres optimizer
 (SURVEY.md §4 "Join strategy selection: absent"). In Spark, Catalyst +
-AQE already pick broadcast joins below
-``spark.sql.autoBroadcastJoinThreshold`` and split skewed sort-merge
-partitions at runtime; this module adds the two knobs the north_rule
-demands explicitly:
+AQE pick broadcast joins below ``spark.sql.autoBroadcastJoinThreshold``
+and split skewed sort-merge partitions at runtime; a caller that knows
+a side is small (a few thousand query shapes) calls ``F.broadcast`` on
+it, which survives the size inflation of a cover explode. This module
+adds what the planner does not do by itself:
 
-- ``maybe_broadcast``: force a broadcast hint when the caller *knows*
-  the dimension side is small (e.g. a polygon cover set of a few
-  thousand query envelopes) — cheaper and more reliable than waiting
-  for AQE's runtime statistics, and it survives cover explosion which
-  inflates size estimates.
-- ``salt``/``explode_salt``: shuffle-key salting for hot cells (cities:
-  millions of images land in one hex cell). The big (probe) side gets a
-  deterministic salt from a stable row key; the small (build) side is
-  exploded across all salt values, so the hot cell's rows spread over
-  ``buckets`` reducers instead of one.
+- ``with_salt``/``explode_salt``: shuffle-key salting for hot cells
+  (cities: millions of images land in one hex cell). The big (probe)
+  side gets a deterministic salt from a stable row key; the small
+  (build) side is exploded across all salt values, so the hot cell's
+  rows spread over ``buckets`` reducers instead of one.
+- ``widen_if_narrow``: one round-robin shuffle for a scan planned on
+  fewer partitions than the cluster offers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def maybe_broadcast(df: DataFrame, *, hint: bool | None) -> DataFrame:
-    """Apply a broadcast hint. ``hint=True`` forces the hint (caller
-    knows the side is small), ``hint=False`` forbids it (exercise the
-    shuffle path), ``hint=None`` leaves the plan unhinted so Catalyst's
-    size estimate + AQE's runtime statistics decide — deliberately NOT
-    a probe job: an eager count per join call costs a scheduling round
-    trip and AQE already re-plans to broadcast when the built side
-    turns out small."""
-    if hint is True:
-        return F.broadcast(df)
-    return df
 
 
 def salt_column(key: Column, buckets: int) -> Column:

@@ -15,7 +15,7 @@ import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from check_correctness import compare_frames  # noqa: E402
+from check_correctness import compare_frames, run_gates  # noqa: E402
 
 
 def test_double_vs_bigint_is_a_failure():
@@ -62,3 +62,22 @@ def test_int32_vs_int64_is_not_a_failure():
     a = pd.DataFrame({"x": pd.array([1, 2], dtype="int32")})
     b = pd.DataFrame({"x": pd.array([1, 2], dtype="int64")})
     assert compare_frames(a, b)["ok"]
+
+
+def test_a_raising_gate_fails_and_the_loop_goes_on(capsys):
+    import duckdb
+
+    class Frame:
+        def toPandas(self):
+            return pd.DataFrame({"x": [1]})
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("gate exploded")
+
+    qs = {"boom": boom, "ok": lambda spark, sf_dir: Frame()}
+    oracles = {"boom": "SELECT 1 AS x", "ok": "SELECT 1 AS x"}
+    failures = run_gates(None, duckdb.connect(), "unused", qs, oracles)
+    out = capsys.readouterr().out
+    assert failures == ["boom"]
+    assert "FAIL raised RuntimeError: gate exploded" in out
+    assert any(line.startswith("ok") and " OK " in line for line in out.splitlines())

@@ -4,17 +4,21 @@ dopartialreplication) re-expressed against main.py in-process."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
+
+# the checkout this test file belongs to, whatever its path
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
 def cli(spark, monkeypatch):
     """Run main.main(argv) against the session-scoped SparkSession
     (get_spark returns the active session via getOrCreate)."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import main as m
 
     return m.main
@@ -180,26 +184,23 @@ def test_spark_submit_py_files_e2e(tmp_path):
     there), and run a gated query end-to-end in a fresh spark-submit
     driver. Proves the zip is self-contained and main.py resolves the
     engine exclusively through --py-files, exactly as on a cluster."""
-    import os
     import shutil
     import subprocess
-    import sys
     import zipfile
 
     import pyspark
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     workdir = tmp_path / "submit"
     workdir.mkdir()
     zpath = workdir / "engine.zip"
     with zipfile.ZipFile(zpath, "w") as z:
-        pkg = os.path.join(repo, "changesetmd_spark")
+        pkg = os.path.join(REPO, "changesetmd_spark")
         for dirpath, _dirnames, filenames in os.walk(pkg):
             for fn in filenames:
                 if fn.endswith(".py"):
                     full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, repo))
-    shutil.copy(os.path.join(repo, "main.py"), workdir / "main.py")
+                    z.write(full, os.path.relpath(full, REPO))
+    shutil.copy(os.path.join(REPO, "main.py"), workdir / "main.py")
 
     spark_submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}

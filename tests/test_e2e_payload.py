@@ -36,7 +36,7 @@ def test_pipeline_preserves_pixels_and_captions(spark):
             max_lon=lambda d: d.min_lon + rng.uniform(5, 30, 30),
         )
     )
-    out = sj.assign_images(images, boxes, res=3, broadcast_boxes=True, keep_payload=True)
+    out = sj.assign_images(images, boxes, res=3, keep_payload=True)
     rows = out.select("image_id", "bytes", "caption", "fmt").collect()
     assert len(rows) > 50  # meaningful sample survived the join
     for r in rows:

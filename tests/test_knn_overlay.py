@@ -46,7 +46,7 @@ def test_ring_knn_equals_exact(spark):
     }
     rings = {
         (r.query_id, r.point_id, r.knn_rank)
-        for r in K.knn_join_rings(qs, pts, 5, res=2, rings=4, broadcast_queries=True)
+        for r in K.knn_join_rings(qs, pts, 5, res=2, rings=4)
         .select("query_id", "point_id", "knn_rank")
         .collect()
     }
@@ -292,7 +292,7 @@ def test_overlay_matches_bruteforce(spark):
     got = {
         (r.a_box_id, r.b_box_id)
         for r in ov.overlay_join(
-            spark.createDataFrame(A), spark.createDataFrame(B), zoom=5, broadcast_b=True
+            spark.createDataFrame(A), spark.createDataFrame(B), zoom=5
         ).select("a_box_id", "b_box_id").collect()
     }
     want = set()
@@ -326,7 +326,7 @@ def test_safe_knn_exact_at_sparse_density(spark):
     }
     rings_only = {
         (r.query_id, r.point_id, r.knn_rank)
-        for r in K.knn_join_rings(qs, pts, 5, res=2, rings=4, broadcast_queries=True)
+        for r in K.knn_join_rings(qs, pts, 5, res=2, rings=4)
         .select("query_id", "point_id", "knn_rank").collect()
     }
     safe = {
@@ -368,7 +368,7 @@ def test_polygon_contains_matches_numpy_oracle(spark):
         for rw in pj.polygon_contains_join(
             spark.createDataFrame(pts_pdf),
             spark.createDataFrame(polys_pdf),
-            n_vertices=6, res=2, broadcast_polygons=True,
+            n_vertices=6, res=2,
         ).select("point_id", "poly_id").collect()
     }
     want = set()
@@ -384,23 +384,6 @@ def test_polygon_contains_matches_numpy_oracle(spark):
         for pid in pts_pdf.point_id[inside]:
             want.add((int(pid), i))
     assert got == want and len(want) > 50
-
-
-def test_polygon_compact_build_rejects_shuffle_path(spark):
-    """compact_build always broadcasts, so an explicit
-    broadcast_polygons=False must fail instead of being ignored."""
-    import pytest
-
-    from changesetmd_spark.operators import polygon_join as pj
-
-    pts = spark.createDataFrame([(0, 1.0, 1.0)], "point_id long, lat double, lon double")
-    polys = spark.createDataFrame(
-        [(0, [0.0, 2.0, 1.0], [0.0, 0.0, 2.0])], "poly_id long, xs array<double>, ys array<double>"
-    )
-    with pytest.raises(ValueError, match="broadcast-path"):
-        pj.polygon_contains_join(
-            pts, polys, n_vertices=3, broadcast_polygons=False, compact_build=True
-        )
 
 
 def test_safe_knn_guard_rejects_oversized_certificate(spark):

@@ -8,8 +8,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from changesetmd_spark import synth
+from changesetmd_spark import profile, synth
 from changesetmd_spark.functions import geo
+from changesetmd_spark.operators import polygon_join as pj
 from changesetmd_spark.operators import spatial_join as sj
 
 
@@ -67,11 +68,7 @@ def test_contains_join_matches_oracle_all_strategies(spark):
     want = _oracle_pairs(ppdf, bpdf)
     assert len(want) > 100  # non-trivial workload
 
-    for kwargs in (
-        dict(broadcast_boxes=True),
-        dict(broadcast_boxes=False),
-        dict(broadcast_boxes=False, salt_buckets=4, point_salt_key="point_id"),
-    ):
+    for kwargs in (dict(), dict(salt_buckets=4, point_salt_key="point_id")):
         got = {
             (r.point_id, r.box_id)
             for r in sj.contains_join(points, boxes, res=3, **kwargs)
@@ -90,7 +87,7 @@ def test_contains_join_res_invariance(spark):
     for res in (2, 3, 5):
         got = {
             (r.point_id, r.box_id)
-            for r in sj.contains_join(points, boxes, res=res, broadcast_boxes=True)
+            for r in sj.contains_join(points, boxes, res=res)
             .select("point_id", "box_id")
             .collect()
         }
@@ -101,7 +98,7 @@ def test_contains_join_res_invariance(spark):
 def test_no_duplicate_pairs(spark):
     points, _ = _points_df(spark, n=2000, seed=31)
     boxes, _ = _boxes_df(spark, n=150, seed=32)
-    out = sj.contains_join(points, boxes, res=3, broadcast_boxes=True)
+    out = sj.contains_join(points, boxes, res=3)
     n = out.count()
     d = out.select("point_id", "box_id").distinct().count()
     assert n == d
@@ -110,9 +107,9 @@ def test_no_duplicate_pairs(spark):
 def test_assign_images_payload_pruned_and_reattached(spark):
     images = synth.images(spark, 400)
     boxes, _ = _boxes_df(spark, n=80, seed=41)
-    slim = sj.assign_images(images, boxes, res=3, broadcast_boxes=True)
+    slim = sj.assign_images(images, boxes, res=3)
     assert "bytes" not in slim.columns
-    full = sj.assign_images(images, boxes, res=3, broadcast_boxes=True, keep_payload=True)
+    full = sj.assign_images(images, boxes, res=3, keep_payload=True)
     assert "bytes" in full.columns
     assert full.count() == slim.count()
     # geotag parity: recompute lat from phash and compare
@@ -126,26 +123,10 @@ def test_broadcast_join_plan_is_shuffle_free_on_points(spark):
     """The broadcast path must not shuffle the (big) point side."""
     points, _ = _points_df(spark, n=500, seed=51)
     boxes, _ = _boxes_df(spark, n=40, seed=52)
-    out = sj.contains_join(points, boxes, res=3, broadcast_boxes=True)
+    out = sj.contains_join(points, boxes, res=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_compact_build_matches_default(spark):
-    points, ppdf = _points_df(spark, n=1500, seed=61)
-    boxes, bpdf = _boxes_df(spark, n=120, seed=62)
-    want = {
-        (r.point_id, r.box_id)
-        for r in sj.contains_join(points, boxes, res=3, broadcast_boxes=True)
-        .select("point_id", "box_id").collect()
-    }
-    got = {
-        (r.point_id, r.box_id)
-        for r in sj.contains_join(points, boxes, res=3, broadcast_boxes=True, compact_build=True)
-        .select("point_id", "box_id").collect()
-    }
-    assert got == want
 
 
 def test_null_coordinates_join_nothing(spark):
@@ -168,11 +149,7 @@ def test_null_coordinates_join_nothing(spark):
     ).first().hex_cell
     cover = {r.hex_cell for r in sj.cover_boxes(boxes, res=3).collect()}
     assert cells[1] in cover and 0 not in cover
-    for kw in (
-        {"broadcast_boxes": True},
-        {"broadcast_boxes": True, "compact_build": True},
-        {"broadcast_boxes": False},
-    ):
+    for kw in ({}, {"salt_buckets": 4, "point_salt_key": "point_id"}):
         got = {r.point_id for r in sj.contains_join(points, boxes, res=3, **kw).collect()}
         assert got == {0}, kw
 
@@ -191,14 +168,13 @@ def test_skewed_hot_cell_salted_parity(spark):
     boxes, _ = _boxes_df(spark, n=100, seed=78)
     ref = {
         (r.point_id, r.box_id)
-        for r in sj.contains_join(points, boxes, res=3, broadcast_boxes=True)
+        for r in sj.contains_join(points, boxes, res=3)
         .select("point_id", "box_id").collect()
     }
     salted = {
         (r.point_id, r.box_id)
         for r in sj.contains_join(
-            points, boxes, res=3, broadcast_boxes=False,
-            salt_buckets=8, point_salt_key="point_id",
+            points, boxes, res=3, salt_buckets=8, point_salt_key="point_id",
         ).select("point_id", "box_id").collect()
     }
     assert salted == ref and len(ref) > 50
@@ -208,7 +184,9 @@ def test_antimeridian_wrap_split_matches_bruteforce(spark):
     """Boxes crossing ±180° (min_lon > max_lon wrap convention):
     split_antimeridian + cover join must equal the straight wraparound
     predicate, and a wrapping box must NOT match points on the far
-    side of the globe (the failure mode of naive min/max swapping)."""
+    side of the globe (the failure mode of naive min/max swapping).
+    The gate's keying is used: one key per half, grouped back by
+    ``box_id >> 1``."""
     rng = np.random.default_rng(31)
     n = 4000
     pts_pdf = pd.DataFrame(
@@ -234,15 +212,25 @@ def test_antimeridian_wrap_split_matches_bruteforce(spark):
             "max_lon": w(clon + slon),
         }
     )
+    # plus a near-global wrapping box: its halves are tall, and a cover
+    # is an axial (q, r) rectangle sheared in lon by lat/3, so the west
+    # half's cover reaches past lon −170 into the east half's cells
+    near_global = dict(box_id=m, min_lat=-75.0, max_lat=75.0, min_lon=-170.0, max_lon=-175.0)
+    boxes_pdf = pd.concat([boxes_pdf, pd.DataFrame([near_global])], ignore_index=True)
+    east, west = (
+        {r.hex_cell for r in sj.cover_boxes(spark.createDataFrame(
+            [(-75.0, 75.0, lo, hi)], "min_lat double, max_lat double, min_lon double, max_lon double"
+        ), res=3).collect()}
+        for lo, hi in ((-170.0, 180.0), (-180.0, -175.0))
+    )
+    assert east & west
     assert (boxes_pdf.min_lon > boxes_pdf.max_lon).any()
 
     halves = sj.split_antimeridian(spark.createDataFrame(boxes_pdf))
     got_rows = [
         (r.point_id, r.box_id)
-        for r in sj.contains_join(
-            spark.createDataFrame(pts_pdf), halves,
-            res=3, broadcast_boxes=True, normalize=False,
-        ).select("point_id", "box_id").collect()
+        for r in sj.contains_join(spark.createDataFrame(pts_pdf), halves, res=3)
+        .select("point_id", F.shiftright("box_id", 1).alias("box_id")).collect()
     ]
     got = set(got_rows)
     want = set()
@@ -255,6 +243,60 @@ def test_antimeridian_wrap_split_matches_bruteforce(spark):
         for pid in pts_pdf.point_id[(in_lat & in_lon).to_numpy()]:
             want.add((int(pid), int(b.box_id)))
     assert got == want and len(want) > 100
-    # a point matches a split box at most once (halves are disjoint) —
-    # checked on the raw row list, before set-dedup could mask it
+    # a point matches a split box at most once (halves are disjoint),
+    # even where they share cover cells — checked on the raw row list,
+    # before set-dedup could mask it
     assert len(got_rows) == len(got)
+
+
+def _run(df):
+    """Run ``df``'s count; return (matches, rows out of phase 1, and
+    each executed join as its class name + left keys, sorted)."""
+    agg = df.groupBy().count()
+    n = agg.collect()[0][0]
+    joins = profile.operators(
+        agg, "BroadcastHashJoinExec", "ShuffledHashJoinExec", "SortMergeJoinExec"
+    )
+    keys = [[j.leftKeys().apply(i).name() for i in range(j.leftKeys().size())] for j in joins]
+    (phase1,) = [j for j, k in zip(joins, keys) if k[0] == "hex_cell"]
+    names = sorted(f"{j.getClass().getSimpleName()}{k}" for j, k in zip(joins, keys))
+    return n, phase1.metrics().apply("numOutputRows").value(), names
+
+
+def test_cover_join_plan_shapes(spark):
+    """Both operators run the two-phase plan: by default two broadcast
+    hash joins and no shuffled join; ``salt_buckets>0`` makes the cell
+    join a ShuffledHashJoin on (hex_cell, _salt). Phase 1's output is
+    the candidate set, so it reads more rows than the matches."""
+    points, _ = _points_df(spark, n=1500, seed=81)
+    boxes, _ = _boxes_df(spark, n=80, seed=82)
+    hexagon = np.array([[1.0, 0.5, -0.5, -1.0, -0.5, 0.5], [0.0, 0.9, 0.9, 0.0, -0.9, -0.9]])
+    polys = spark.createDataFrame(
+        [(i, *(c[:, None] + 8.0 * hexagon).tolist()) for i, c in enumerate(
+            np.random.default_rng(83).uniform([-150, -70], [150, 70], (30, 2)))],
+        "poly_id long, xs array<double>, ys array<double>",
+    )
+    for df, key in (
+        (sj.contains_join(points, boxes, res=3), "box_id"),
+        (pj.polygon_contains_join(points, polys, n_vertices=6, res=3), "poly_id"),
+    ):
+        n, cand, names = _run(df)
+        assert names == sorted(f"BroadcastHashJoinExec{[k]}" for k in ("hex_cell", key))
+        assert cand > n > 0
+
+    n, cand, names = _run(
+        sj.contains_join(points, boxes, res=3, salt_buckets=4, point_salt_key="point_id")
+    )
+    assert "ShuffledHashJoinExec['hex_cell', '_salt']" in names
+    assert cand > n > 0
+
+
+def test_contains_join_frozen_keywords_accept_only_true(spark):
+    import pytest
+
+    points, _ = _points_df(spark, n=10, seed=91)
+    boxes, _ = _boxes_df(spark, n=5, seed=92)
+    sj.contains_join(points, boxes, broadcast_boxes=True, compact_build=True)
+    for kw in ({"broadcast_boxes": False}, {"broadcast_boxes": None}, {"compact_build": False}):
+        with pytest.raises(ValueError):
+            sj.contains_join(points, boxes, **kw)

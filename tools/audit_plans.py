@@ -79,13 +79,15 @@ def main() -> int:
         "- The flagship spatial queries run broadcast hash joins with zero",
         "  shuffles before the final rollup exchange — the image/point side",
         "  is never repartitioned.",
-        "- `spatial_salted` deliberately uses the shuffle path (SMJ/shuffled",
-        "  hash) to exercise salting; identical results are oracle-gated.",
+        "- The containment gates (`spatial_*`, `polygon_contains`) run one",
+        "  two-phase cover join, so each shows 2 joins: the cell join over",
+        "  slim (cell, id) cover pairs, whose rows are the candidates, then",
+        "  the key join on the raw box/polygon table with the exact refine.",
+        "- `spatial_salted` makes the cell join a shuffled hash join on",
+        "  (cell, salt) to exercise salting; the key join is left to the",
+        "  planner. Identical results are oracle-gated.",
         "- py-eval nodes appear only where Python is the design (S2 encode,",
         "  LSH bucket matmul, image decode/embed) — always Arrow-batched.",
-        "- The flagship/polygon gates show 2 BHJ since r6: compact_build",
-        "  broadcasts only (cell, id) pairs and refines via a second",
-        "  broadcast join on the raw box/polygon table.",
         "- `ann_ivf` has NO cross joins since r6: centroid assignment is",
         "  one Arrow matmul UDF against the driver-collected FIXED",
         "  centroid matrix (map-only; bit-identical cells, oracle-gated).",

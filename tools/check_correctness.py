@@ -93,33 +93,27 @@ def compare_frames(sdf: pd.DataFrame, odf: pd.DataFrame) -> dict:
     return out
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    import __spark_entry__ as entry_mod
-    from changesetmd_spark.session import get_spark
-
-    spark = get_spark(app_name="check-correctness", master="local[8]")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
+def run_gates(spark, con, sf_dir: str, qs: dict, oracles: dict, only=()) -> list[str]:
+    """Run each gate in ``qs`` (all, or those named in ``only``) and
+    compare it with its oracle; print one line per gate and return the
+    names that FAIL. A gate whose Spark build, run or oracle raises
+    counts as a FAIL, with its exception printed, and the loop goes on."""
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
-        sdf = fn(spark, sf_dir).toPandas()
-        t_spark = time.time() - t0
-        if name not in oracles:
+        try:
+            sdf = fn(spark, sf_dir).toPandas()
+            t_spark = time.time() - t0
+            odf = con.execute(oracles[name]).fetchdf() if name in oracles else None
+        except Exception as e:
+            print(f"{name:28s} FAIL raised {type(e).__name__}: {e}")
+            failures.append(name)
+            continue
+        if odf is None:
             print(f"{name:28s} rows={len(sdf):7d}  (rows-only, no oracle)  {t_spark:5.1f}s")
             continue
-        odf = con.execute(oracles[name]).fetchdf()
         r = compare_frames(sdf, odf)
         status = "OK " if r["ok"] else "FAIL"
         print(
@@ -140,6 +134,24 @@ def main() -> int:
                 neq = ~(s.astype(str) == o.astype(str)).all(axis=1)
                 print("   first diffs (spark vs oracle):")
                 print(pd.concat([s[neq].head(3), o[neq].head(3)], axis=1).to_string())
+    return failures
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    import __spark_entry__ as entry_mod
+    from changesetmd_spark.session import get_spark
+
+    spark = get_spark(app_name="check-correctness")
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+
+    failures = run_gates(spark, con, sf_dir, entry_mod.queries(), entry_mod.oracle_sql(), only)
     spark.stop()
     if failures:
         print("FAILURES:", failures)
