@@ -392,11 +392,10 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-pole queries (where the lon-branch bound provably collapses)
     # and the ring answer is returned as-is. Results identical across
     # configs by the safe-join certificate.
-    # min_parallelism dropped in r6: the r3-r5 repartition+checkpoint
-    # existed to parallelize the scan-side cell-expression work, which
-    # the non-nullable-key fix deleted — an interleaved A/B now shows
-    # the plain scan faster at BOTH sf0.1 and the 10× input (1.3-1.6s
-    # vs 1.4-2.9s / 1.2-1.4s vs 1.6-5.4s), answers identical.
+    # The points are not repartitioned: an interleaved A/B showed the
+    # plain scan faster than a repartition + checkpoint at BOTH sf0.1
+    # and the 10× input (1.3-1.6s vs 1.4-2.9s / 1.2-1.4s vs 1.6-5.4s),
+    # answers identical.
     out = knn_ops.knn_join_safe(queries, points, k=5, res=2, rings=4)
     return out.select(
         "query_id",

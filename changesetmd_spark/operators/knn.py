@@ -72,7 +72,7 @@ def knn_join_exact(
 # ANY density. With it, the certificate becomes a pure latitude bound
 # (no cos factor) and polar queries certify like everyone else.
 # Scale note: a polar query's candidates = all same-hemisphere points
-# above lat0 = polar_lat − g; dense-pole workloads should raise the
+# above lat0 = POLAR_LAT_DEG − g; dense-pole workloads should raise the
 # threshold (or res) rather than scan a fat cap.
 POLAR_LAT_DEG = 80.0
 
@@ -90,33 +90,19 @@ def knn_join_rings(
     p_id: str = "point_id",
     p_lat: str = "lat",
     p_lon: str = "lon",
-    min_parallelism: int | None = None,
-    polar_lat: float = POLAR_LAT_DEG,
 ) -> DataFrame:
     """Ring-accelerated kNN: candidates restricted to the query's
     ``rings``-disk of hex cells at ``res`` — except queries poleward of
-    ``polar_lat``, which explode over the precomputed polar-cap cell
+    ``POLAR_LAT_DEG``, which explode over the precomputed polar-cap cell
     list (hexgrid.polar_cap_cells, an array LITERAL: same equi-join,
     no extra join branch) so their candidate set is every
-    same-hemisphere point above lat0 = polar_lat − g. Exact when the
+    same-hemisphere point above lat0 = POLAR_LAT_DEG − g. Exact when the
     k-th neighbor is within the per-query guaranteed radius (see
     ``ring_guarantee_km``); verified against ``knn_join_exact`` in
-    tests at the densities the engine is benchmarked at.
-
-    ``min_parallelism``: when set, round-robin repartition the slim
-    (id, lat, lon) points relation to at least this many partitions
-    before the hex encode + broadcast join. The join's parallelism
-    otherwise equals the scan's split count, and a small parquet input
-    (one row group) scans as ONE task no matter what
-    ``maxPartitionBytes`` says — serializing the dominant stage. One
-    cheap shuffle of 24-byte rows buys full-cluster parallelism; at
-    real scale (many row groups) the input splits already provide it,
-    so leave unset."""
-    if min_parallelism:
-        points = points.repartition(min_parallelism)
+    tests at the densities the engine is benchmarked at."""
     g = ring_disk_radius_deg(res, rings) / math.sqrt(2.0)
-    lat0 = polar_lat - g
-    is_polar = F.abs(F.col(q_lat)) >= F.lit(polar_lat)
+    lat0 = POLAR_LAT_DEG - g
+    is_polar = F.abs(F.col(q_lat)) >= F.lit(POLAR_LAT_DEG)
     # non-polar queries explode their ring disk; polar queries pick up
     # the cap cells via a tiny cross-shaped join on the (already small)
     # BUILD side — both land in the SAME hex_cell equi-join, so the big
@@ -165,14 +151,11 @@ def knn_join_safe(
     p_id: str = "point_id",
     p_lat: str = "lat",
     p_lon: str = "lon",
-    min_parallelism: int | None = None,
     max_cert_rows: int = 5_000_000,
 ) -> DataFrame:
     """EXACT kNN at any density and any latitude: ring-accelerated
     candidates, then an exact fallback for precisely the queries the
-    rings cannot certify. ``min_parallelism`` repartitions the slim
-    points relation ONCE (see ``knn_join_rings``); both the ring join
-    and the exact fallback reuse that partitioning.
+    rings cannot certify.
 
     A query's ring result is provably global iff it found ≥ k
     candidates AND its k-th distance ≤ its *per-query* guarantee
@@ -201,17 +184,7 @@ def knn_join_safe(
     checkpointed ring result IS the answer — zero further plans.
     Otherwise the uncertified rows (id, coords, band) are re-emitted
     as a literal DataFrame and ONE broadcast band join against the
-    checkpointed points repairs exactly those queries."""
-    if min_parallelism:
-        # repartition AND materialize the slim points once (the
-        # single-row-group escape hatch, see knn_join_rings). Keeping
-        # this as its own eager job is MEASURED faster than an inline
-        # repartition in the ring plan (r4: 3.4s vs 5.4s warm;
-        # re-confirmed r5: 3.0s vs 4.5s) — the checkpoint's dedicated
-        # materialization buys fully parallel downstream stages. At
-        # real scale leave min_parallelism unset: input splits already
-        # parallelize and the plan stays fully streaming.
-        points = points.repartition(min_parallelism).localCheckpoint()
+    points repairs exactly those queries."""
     # guarantee rides the ring plan as one extra column (constant per
     # query) so certification needs NO further Spark job: the per-query
     # stats fold in plain Python over the collected checkpoint rows.
@@ -304,9 +277,7 @@ def ring_disk_radius_deg(res: int, rings: int) -> float:
     return max(0, rings - 1) * (3**0.5 / 2) * hexgrid.size_deg(res)
 
 
-def ring_guarantee_km(
-    q_lat: Column, q_lon: Column, res: int, rings: int, polar_lat: float = POLAR_LAT_DEG
-) -> Column:
+def ring_guarantee_km(q_lat: Column, q_lon: Column, res: int, rings: int) -> Column:
     """Per-query certificate radius: every point whose haversine
     distance to (q_lat, q_lon) is ≤ this many km provably lies inside
     the query's rings-disk. Derivation (G = disk radius in Euclidean
@@ -322,10 +293,10 @@ def ring_guarantee_km(
     queries certify at all. The guarantee is the min of the two branch
     bounds — any point within it must be inside the disk.
 
-    POLAR regime (|q_lat| ≥ polar_lat): the disk bound is useless
+    POLAR regime (|q_lat| ≥ POLAR_LAT_DEG): the disk bound is useless
     there (cos_min → 0), but these queries join against the full
     polar-cap cell set (knn_join_rings), a proven superset of every
-    cell holding a point with |φ| ≥ lat0 = polar_lat − g. A
+    cell holding a point with |φ| ≥ lat0 = POLAR_LAT_DEG − g. A
     non-candidate point therefore has |φ| < lat0, i.e. Δφ >
     |q_lat| − lat0, and its haversine distance exceeds
     111.19·(|q_lat| − lat0) km — a pure meridian bound with no cos
@@ -333,7 +304,7 @@ def ring_guarantee_km(
     longitudes), so polar queries certify like mid-latitude ones."""
     G = ring_disk_radius_deg(res, rings)
     g = G / math.sqrt(2.0)
-    lat0 = polar_lat - g
+    lat0 = POLAR_LAT_DEG - g
     cos_min = F.cos(F.radians(F.abs(q_lat) + F.lit(g)))
     lat_branch = F.lit(_KM_PER_DEG_LAT * g)
     lon_branch = F.lit(2.0 * _R_KM * math.sin(math.radians(g) / 2.0)) * F.sqrt(
@@ -343,7 +314,7 @@ def ring_guarantee_km(
     # cos φ is no longer bounded below by cos_min (pole degeneracy)
     ok = (F.abs(q_lon) <= F.lit(180.0 - G)) & (F.abs(q_lat) + F.lit(g) < F.lit(90.0))
     return F.when(
-        F.abs(q_lat) >= F.lit(polar_lat),
+        F.abs(q_lat) >= F.lit(POLAR_LAT_DEG),
         F.lit(_KM_PER_DEG_LAT) * (F.abs(q_lat) - F.lit(lat0)),
     ).otherwise(F.when(ok, F.least(lat_branch, lon_branch)).otherwise(F.lit(0.0)))
 

@@ -82,18 +82,22 @@ def split_antimeridian(boxes: DataFrame) -> DataFrame:
     keeps ``contains_join``'s unique-key contract — the halves' covers
     can share cells — and ``box_id >> 1`` gives back the original id.
     The halves are disjoint in lon, so a point still matches a box at
-    most once: no dedup shuffle is introduced. The transform is a
-    narrow union, no shuffle."""
+    most once: no dedup shuffle is introduced. The transform is one
+    projection that explodes each box into its 1 or 2 halves, so the
+    box table is read once per consumer (a union of two branches would
+    read it twice)."""
     wrap = F.col("min_lon") > F.col("max_lon")
-    east = boxes.withColumn(
-        "max_lon", F.when(wrap, F.lit(180.0)).otherwise(F.col("max_lon"))
-    ).withColumn("box_id", F.col("box_id") * 2)
-    west = (
-        boxes.filter(wrap)
-        .withColumn("min_lon", F.lit(-180.0))
-        .withColumn("box_id", F.col("box_id") * 2 + 1)
+    halves = boxes.select(
+        "*", F.explode(F.sequence(F.lit(0), F.when(wrap, 1).otherwise(0))).alias("_half")
     )
-    return east.unionByName(west)
+    west = F.col("_half") == 1
+    return halves.withColumns(
+        {
+            "box_id": F.col("box_id") * 2 + F.col("_half"),
+            "min_lon": F.when(west, F.lit(-180.0)).otherwise(F.col("min_lon")),
+            "max_lon": F.when(wrap & ~west, F.lit(180.0)).otherwise(F.col("max_lon")),
+        }
+    ).drop("_half")
 
 
 def tile_points(

@@ -40,7 +40,7 @@ def explode_salt(df: DataFrame, buckets: int, out: str = "_salt") -> DataFrame:
     )
 
 
-def widen_if_narrow(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition a slim relation iff its current plan
     would run on fewer partitions than the cluster offers.
 
@@ -56,8 +56,7 @@ def widen_if_narrow(df: DataFrame, min_parallelism: int | None = None) -> DataFr
     hundreds of splits — the condition is false and NO shuffle is
     added; this is not a blanket repartition.
     """
-    spark = df.sparkSession
-    n = min_parallelism or spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df

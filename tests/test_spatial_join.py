@@ -180,13 +180,14 @@ def test_skewed_hot_cell_salted_parity(spark):
     assert salted == ref and len(ref) > 50
 
 
-def test_antimeridian_wrap_split_matches_bruteforce(spark):
+def test_antimeridian_wrap_split_matches_bruteforce(spark, tmp_path):
     """Boxes crossing ±180° (min_lon > max_lon wrap convention):
     split_antimeridian + cover join must equal the straight wraparound
     predicate, and a wrapping box must NOT match points on the far
     side of the globe (the failure mode of naive min/max swapping).
     The gate's keying is used: one key per half, grouped back by
-    ``box_id >> 1``."""
+    ``box_id >> 1``. The boxes come from a parquet file, which the
+    join reads once per phase."""
     rng = np.random.default_rng(31)
     n = 4000
     pts_pdf = pd.DataFrame(
@@ -226,12 +227,16 @@ def test_antimeridian_wrap_split_matches_bruteforce(spark):
     assert east & west
     assert (boxes_pdf.min_lon > boxes_pdf.max_lon).any()
 
-    halves = sj.split_antimeridian(spark.createDataFrame(boxes_pdf))
-    got_rows = [
-        (r.point_id, r.box_id)
-        for r in sj.contains_join(spark.createDataFrame(pts_pdf), halves, res=3)
-        .select("point_id", F.shiftright("box_id", 1).alias("box_id")).collect()
-    ]
+    boxes_path = str(tmp_path / "boxes.parquet")
+    spark.createDataFrame(boxes_pdf).write.parquet(boxes_path)
+    halves = sj.split_antimeridian(spark.read.parquet(boxes_path))
+    pairs = sj.contains_join(spark.createDataFrame(pts_pdf), halves, res=3).select(
+        "point_id", F.shiftright("box_id", 1).alias("box_id")
+    )
+    got_rows = [(r.point_id, r.box_id) for r in pairs.collect()]
+    agg = pairs.groupBy().count()
+    assert agg.collect()[0][0] == len(got_rows)
+    assert len(profile.operators(agg, "FileSourceScanExec")) == 2
     got = set(got_rows)
     want = set()
     for b in boxes_pdf.itertuples(index=False):

@@ -234,14 +234,14 @@ BMP_FLAT = [255, 0, 0, 0, 255, 0, 0, 0, 255, 10, 20, 30]
 
 def test_real_bmp_decodes_through_registry():
     """A genuine foreign container (not the fake codec, not a mock)
-    traverses the registry: hand-built uncompressed 24-bit BMP, both
-    bottom-up and top-down row orders, exact RGB out."""
+    through decode_blob's BMP branch: hand-built uncompressed 24-bit
+    BMP, both bottom-up and top-down row orders, exact RGB out."""
     for td in (False, True):
         fmt, w, h, px = multimodal.decode_blob(_make_bmp(BMP_ROWS, top_down=td))
         assert (fmt, w, h) == ("bmp", 2, 2)
         assert px.tolist() == BMP_FLAT
-    # unsupported BMP variants fail loudly as corrupt-claimed-format
-    # (decode error), not as "no codec registered"
+    # an unsupported BMP variant fails as a BMP decode error, not as
+    # an unknown container
     bad = bytearray(_make_bmp(BMP_ROWS))
     bad[28] = 32  # bpp=32
     with pytest.raises(ValueError, match="unsupported BMP"):
@@ -273,8 +273,8 @@ def test_real_wav_decodes_through_registry():
 
 def test_real_format_blobs_through_spark_operators(spark):
     """Mixed fake-codec + REAL-format rows through the mapInPandas
-    operators: the FKIM/FKAU bulk stays on the vectorized path while
-    BMP/WAV rows decode via the registry — same output contract."""
+    operators: each row decodes by its magic bytes, rows of one shape
+    stack into one matrix — same output contract for every format."""
     import pandas as pd
 
     bmp = _make_bmp(BMP_ROWS)
@@ -309,76 +309,38 @@ def test_real_format_blobs_through_spark_operators(spark):
     assert astats["fk"].sample_rate == 16000  # fake path untouched
 
 
-def test_user_codec_overrides_builtin():
-    """Round-4 review finding: registered codecs must be reachable even
-    when a built-in would claim the blob — user codecs walk first."""
-    bmp = _make_bmp(BMP_ROWS)
-
-    def sniff(blob):
-        return bytes(blob[:2]) == b"BM"
-
-    def decode(blob):
-        return "user", 1, 1, np.array([9, 9, 9], dtype=np.uint8)
-
-    multimodal.register_image_codec(sniff, decode)
-    try:
-        fmt, w, h, px = multimodal.decode_blob(bmp)
-        assert (fmt, w, h) == ("user", 1, 1) and px.tolist() == [9, 9, 9]
-    finally:
-        multimodal._IMAGE_CODECS.clear()
-    assert multimodal.decode_blob(bmp)[0] == "bmp"  # builtin back in charge
-
-
 def test_audio_rejects_unknown_codec():
-    with pytest.raises(NotImplementedError, match="register_audio_codec"):
+    # RIFF without the WAVE form type is not a WAV
+    with pytest.raises(ValueError, match="unknown audio container.*FKAU or RIFF/WAVE"):
         multimodal.decode_audio_blob(b"RIFF" + b"\x00" * 20)
 
 
 def test_decode_rejects_unknown_codec():
-    # the error must name the pluggable-registry hook (VERDICT r3 item 5)
-    with pytest.raises(NotImplementedError, match="register_image_codec"):
+    with pytest.raises(ValueError, match="unknown image container.*FKIM or 24-bit BMP"):
         multimodal.decode_blob(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20)
 
 
-def test_codec_registry_dispatch_and_fake_path_unchanged():
-    """Pluggable registry (VERDICT r3 item 5): a registered codec
-    claims foreign magics; the FKIM/FKAU fake paths stay first and
-    byte-identical (they gate the oracles); unknown blobs still fail
-    loudly after an unclaiming registry walk."""
-    import numpy as np
+def test_truncated_payloads_fail_naming_the_row(spark):
+    """A payload shorter than its header declares fails the job with
+    the row's key, instead of giving stats over the bytes that are
+    left (a 2x2 FKIM image cut to 7 payload bytes, an FKAU clip of 16
+    samples cut by 6 bytes)."""
+    from pyspark.errors import PythonException
 
-    fake_png = b"\x89PNG\r\n\x1a\n" + b"\x01\x02\x03"
-
-    def sniff(blob):
-        return bytes(blob[:4]) == b"\x89PNG"
-
-    def decode(blob):
-        return "png", 1, 1, np.array([1, 2, 3], dtype=np.uint8)
-
-    multimodal.register_image_codec(sniff, decode)
-    try:
-        fmt, w, h, px = multimodal.decode_blob(fake_png)
-        assert (fmt, w, h) == ("png", 1, 1) and px.tolist() == [1, 2, 3]
-        # (FKIM-branch byte-identity is covered by
-        # test_fake_codec_roundtrip_lossless_and_psnr + oracle gates)
-        # unknown magic still raises (registry sniff declines)
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_blob(b"GIF89a" + b"\x00" * 10)
-    finally:
-        multimodal._IMAGE_CODECS.clear()
-
-    def asniff(blob):
-        return bytes(blob[:4]) == b"RIFF"
-
-    def adecode(blob):
-        return 8000, 2, np.array([5, -5], dtype=np.int16)
-
-    multimodal.register_audio_codec(asniff, adecode)
-    try:
-        sr, n, pcm = multimodal.decode_audio_blob(b"RIFF" + b"\x00" * 8)
-        assert (sr, n) == (8000, 2) and pcm.tolist() == [5, -5]
-    finally:
-        multimodal._AUDIO_CODECS.clear()
+    fkim = synth.encode_image(
+        np.array([12345], dtype=np.uint64), 2, 2, np.array([0], dtype=np.int64)
+    )[0]
+    images = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["ok", "cut"], "bytes": [fkim, fkim[: multimodal.HEADER_LEN + 7]]})
+    )
+    with pytest.raises(PythonException, match="cut: FKIM 2x2 payload of 7 bytes is not whole frames"):
+        multimodal.decode_stats(images).collect()
+    fkau = synth.encode_audio(np.array([7], dtype=np.uint64), 16, 16000)[0]
+    audio = spark.createDataFrame(
+        pd.DataFrame({"audio_id": ["ok", "cut"], "bytes": [fkau, fkau[:-6]]})
+    )
+    with pytest.raises(PythonException, match="cut: FKAU payload of 26 bytes .* is not 16 16-bit samples"):
+        multimodal.audio_stats(audio).collect()
 
 
 def test_frame_sample_video_payloads(spark):

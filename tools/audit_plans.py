@@ -40,7 +40,7 @@ def main() -> int:
     from changesetmd_spark.profile import driver_calls
     from changesetmd_spark.session import get_spark
 
-    spark = get_spark(app_name="audit-plans", master="local[8]")
+    spark = get_spark(app_name="audit-plans")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for name, fn in em.queries().items():
