@@ -66,10 +66,8 @@ def files_prunable(path: str, bbox) -> tuple[int, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
-        app_name="bench_extra", master=f"local[{cpus}]",
-        extra_conf={"spark.sql.files.maxPartitionBytes": "33554432"},
+        app_name="bench_extra", extra_conf={"spark.sql.files.maxPartitionBytes": "33554432"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {}

@@ -501,13 +501,12 @@ def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID + quality features + rolling fingerprint per doc.
     NOT widened: pure narrow projection — repartition only adds a
     shuffle (0.30s narrow vs 0.41s widened, r5 A/B)."""
-    docs = load(spark, sf_dir, "documents")
-    feats = text_ops.quality_features(F.col("text"))
-    return docs.select(
+    feats = text_ops.quality_features("text")
+    return load(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        text_ops.lang_id(F.col("text")).alias("lang_pred"),
-        text_ops.fingerprint(F.col("text")).alias("fp"),
-        *[c.alias(n) for n, c in feats.items()],
+        f"{text_ops.lang_id('text')} AS lang_pred",
+        f"{text_ops.fingerprint('text')} AS fp",
+        *[f"{e} AS {n}" for n, e in feats.items()],
     )
 
 
@@ -531,24 +530,16 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved A/B at sf0.1). Widening stays ONLY where the scan
     feeds heavy reused per-row compute (ngram/minhash inverted
     indexes: 2.1s widened vs 3.3s narrow)."""
-    docs = load(spark, sf_dir, "documents")
-    feats = text_ops.quality_features(F.col("text"))
-    enriched = docs.select(
+    feats = text_ops.quality_features("text")
+    kept = load(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "text",
-        text_ops.lang_id(F.col("text")).alias("lang_pred"),
-        text_ops.fingerprint(F.col("text")).alias("fp"),
-        feats["n_tokens"].alias("n_tokens"),
-        feats["punct_ratio_q"].alias("punct_ratio_q"),
-    )
-    kept = enriched.filter(
-        (F.col("n_tokens") >= 5)
-        & (F.col("punct_ratio_q") < 2000)
-        & (F.col("lang_pred") == "en")
-    )
-    winners = kept.groupBy(F.md5(F.col("text")).alias("_h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
+        f"{text_ops.lang_id('text')} AS lang_pred",
+        f"{text_ops.fingerprint('text')} AS fp",
+        f"{feats['n_tokens']} AS n_tokens",
+        f"{feats['punct_ratio_q']} AS punct_ratio_q",
+    ).filter("n_tokens >= 5 AND punct_ratio_q < 2000 AND lang_pred = 'en'")
+    winners = kept.groupBy(F.expr("md5(text) AS _h")).agg(F.expr("min(doc_id) AS doc_id"))
     return (
         kept.join(winners.select("doc_id"), "doc_id", "left_semi")
         .select("doc_id", "fp", "n_tokens")
@@ -561,18 +552,13 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent md5-hash checksum of the token multiset — so the
     tokenizer's exact split (unicode included) is cross-engine
     verified, not just its count."""
-    docs = load(spark, sf_dir, "documents")
-    toks = text_ops.bpe_tokens(F.col("text"))
-    fp = F.aggregate(
-        F.transform(toks, text_ops.token_hash),
-        F.lit(0).cast("long"),
-        lambda acc, h: acc + h,
-    )
-    return docs.select(
+    toks = text_ops.bpe_tokens("text")
+    hashes = f"transform({toks}, t -> {text_ops.token_hash('t')})"
+    return load(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        F.size(toks).cast("long").alias("n_bpe"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_bpe"),
-        fp.alias("bpe_fp"),
+        f"CAST(size({toks}) AS BIGINT) AS n_bpe",
+        f"CAST(size(array_distinct({toks})) AS BIGINT) AS n_distinct_bpe",
+        f"aggregate({hashes}, CAST(0 AS BIGINT), (acc, h) -> acc + h) AS bpe_fp",
     )
 
 

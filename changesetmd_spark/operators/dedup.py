@@ -18,16 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import (
-    TOKEN_HASH_HI_SQL,
-    TOKEN_HASH_SQL,
-    TOKENS_SQL,
-    token_hash,
-    token_hash_expr,
-    token_hash_hi,
-    tokens,
-    tokens_expr,
-)
+from .text import TOKEN_HASH_HI_SQL, TOKEN_HASH_SQL, TOKENS_SQL, token_hash, token_hash_hi, tokens
 
 # MinHash parameters (shared by Spark + oracle SQL)
 N_PERM = 16
@@ -92,14 +83,17 @@ def EXACT_DEDUP_SQL(id_col: str = "doc_id", text_col: str = "text", table: str =
 # shingles
 # ---------------------------------------------------------------------------
 
-def shingles_expr(text: str) -> str:
+def shingles(text: str) -> str:
     """Spark SQL text: the distinct k-word shingles of a document
     (array<string>). Short docs (<k tokens) produce one whole-text
-    shingle."""
-    toks = tokens_expr(text)
+    shingle; a text with no token (null, empty or blank) has none, as
+    in DuckDB. ``concat_ws`` makes '' of such a text's null or empty
+    slice and no real shingle is '', so '' is removed: kept, it would
+    pair every token-less text with every other one."""
+    toks = tokens(text)
     return (
-        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {SHINGLE_K - 1}, 1)), "
-        f"i -> concat_ws(' ', slice({toks}, i, {SHINGLE_K}))))"
+        f"array_remove(array_distinct(transform(sequence(1, greatest(size({toks}) - {SHINGLE_K - 1}, 1)), "
+        f"i -> concat_ws(' ', slice({toks}, i, {SHINGLE_K})))), '')"
     )
 
 
@@ -115,8 +109,8 @@ def SHINGLES_SQL(text: str) -> str:
 def _exploded_shingle_hashes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sh) rows: one per distinct shingle hash per doc."""
     return docs.selectExpr(
-        f"{id_col} AS id", f"explode({shingles_expr(text_col)}) AS _s"
-    ).selectExpr("id", f"{token_hash_expr('_s')} AS sh")
+        f"{id_col} AS id", f"explode({shingles(text_col)}) AS _s"
+    ).selectExpr("id", f"{token_hash('_s')} AS sh")
 
 
 def _jaccard_pairs(common: DataFrame, sizes: DataFrame, threshold_q: int) -> DataFrame:
@@ -346,46 +340,10 @@ def MINHASH_LSH_SQL(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def _votes32(hashes) -> object:
-    """array<int> of 32 per-bit ±1 vote sums over an array of 32-bit
-    hashes. Single pass with an array accumulator (a per-bit aggregate
-    would re-scan the tokens 32×; measured 2× faster at bench scale).
-    Bit b of h via exact power-of-two division (h < 2^32 so h and
-    h/2^b are double-exact; shiftright() can't take a lambda var)."""
-    zero = F.array_repeat(F.lit(0), 32)
-    powers = F.array(*[F.lit(float(1 << b)) for b in range(32)])
-    bits_of = lambda h: F.transform(  # noqa: E731
-        powers,
-        lambda p: F.when(F.pmod(F.floor(h / p), F.lit(2)) == 1, F.lit(1)).otherwise(F.lit(-1)),
-    )
-    return F.aggregate(
-        hashes, zero, lambda acc, h: F.zip_with(acc, bits_of(h), lambda a, v: a + v)
-    )
-
-
-def simhash(text_col) -> object:
-    """64-bit SimHash over distinct token hashes: bit b of the result
-    is 1 iff Σ_tokens (±1 per token's bit b) > 0. Bits 0-31 come from
-    token_hash (md5 chars 1-8), bits 32-63 from token_hash_hi (chars
-    9-16); bit 63 is the sign bit (two's-complement weight −2^63).
-    The DuckDB oracle computes the same votes per-bit — results are
-    identical, only the fold shape differs."""
-    toks = F.array_distinct(tokens(text_col))
-    votes = F.concat(
-        _votes32(F.transform(toks, token_hash)),
-        _votes32(F.transform(toks, token_hash_hi)),
-    )
-    weights = F.array(*[F.lit(_sh_bit_weight(b)).cast("long") for b in range(SH_BITS)])
-    return F.aggregate(
-        F.zip_with(votes, weights, lambda v, w: F.when(v > 0, w).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def SIMHASH_SQL(text: str) -> str:
-    """Scalar oracle twin of ``simhash`` (one expression per row; the
-    gate's set-based twin is SIMHASH_SIGS_SQL — same bits)."""
+    """Scalar DuckDB SimHash of ``text`` (one expression per row; the
+    gate's set-based twin of ``simhash_sigs`` is SIMHASH_SIGS_SQL —
+    same bits)."""
     toks = f"list_distinct({TOKENS_SQL(text)})"
     h_lo = f"list_transform({toks}, t -> {TOKEN_HASH_SQL('t')})"
     h_hi = f"list_transform({toks}, t -> {TOKEN_HASH_HI_SQL('t')})"
@@ -403,41 +361,38 @@ def SIMHASH_SQL(text: str) -> str:
 
 
 def simhash_sigs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, sig): SimHash signatures via explode + 64 codegen'd
-    conditional-sum aggregates (map-side partial combine, one shuffle
-    on id). Identical bits to the ``simhash`` column expression, but
-    the per-token work runs inside whole-stage codegen — Spark's
-    higher-order array lambdas evaluate INTERPRETED per element, which
-    made the fold the dominant cost at bench scale (~2× slower).
-    Token-less docs (empty text) keep the fold's sig = 0 via the final
-    left join."""
-    toks = F.array_distinct(tokens(F.col(text_col)))
-    ex = docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("_t")).select(
-        "id", token_hash(F.col("_t")).alias("_h1"), token_hash_hi(F.col("_t")).alias("_h2")
-    )
+    """(id, sig): 64-bit SimHash over a document's distinct tokens. Bit
+    b of sig is 1 iff Σ_tokens (±1 per token hash's bit b) > 0; bits
+    0-31 come from token_hash (md5 chars 1-8), bits 32-63 from
+    token_hash_hi (chars 9-16), and bit 63 is the sign bit
+    (two's-complement weight −2^63).
+
+    Explode + 64 codegen'd conditional-sum aggregates (map-side partial
+    combine, one shuffle on id): the per-token work runs inside
+    whole-stage codegen, where a fold over higher-order array lambdas
+    would evaluate interpreted per element (~2× slower at bench scale).
+    Token-less docs (empty or null text) keep sig = 0 via the final
+    left join. The explode, the votes and the fold are one SQL string
+    apiece."""
+    ex = docs.selectExpr(
+        f"{id_col} AS id", f"explode(array_distinct({tokens(text_col)})) AS _t"
+    ).selectExpr("id", f"{token_hash('_t')} AS _h1", f"{token_hash_hi('_t')} AS _h2")
     votes = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col("_h1" if b < 32 else "_h2"), b % 32)
-                .bitwiseAND(F.lit(1))
-                == 1,
-                1,
-            ).otherwise(-1)
-        ).alias(f"_v{b}")
+        F.expr(
+            f"sum(CASE WHEN shiftright({'_h1' if b < 32 else '_h2'}, {b % 32}) & 1 = 1 "
+            f"THEN 1 ELSE -1 END) AS _v{b}"
+        )
         for b in range(SH_BITS)
     ]
-    agg = ex.groupBy("id").agg(*votes)
-    sig = None
-    for b in range(SH_BITS):
-        term = F.when(F.col(f"_v{b}") > 0, F.lit(_sh_bit_weight(b)).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = term if sig is None else sig + term
-    with_sig = agg.select("id", sig.alias("sig"))
+    sig = " + ".join(
+        f"CASE WHEN _v{b} > 0 THEN CAST({_sh_bit_weight(b)} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for b in range(SH_BITS)
+    )
+    with_sig = ex.groupBy("id").agg(*votes).selectExpr("id", f"{sig} AS sig")
     return (
-        docs.select(F.col(id_col).alias("id"))
+        docs.selectExpr(f"{id_col} AS id")
         .join(with_sig, "id", "left")
-        .select("id", F.coalesce(F.col("sig"), F.lit(0).cast("long")).alias("sig"))
+        .selectExpr("id", "coalesce(sig, CAST(0 AS BIGINT)) AS sig")
     )
 
 

@@ -3,10 +3,12 @@ ID, quality scoring, token counting, fingerprinting).
 
 The reference's only text columns are ``comment_text`` and the tags
 map (queries.py:24-26, changesetmd.py:223-234); these operators
-generalize them for a training-data pipeline. Every function is a pure
-Spark column expression (codegen; no UDFs), and each has an exactly
-matching ANSI-SQL fragment (``*_SQL``) used by the DuckDB oracle gate —
-the cross-engine determinism rules are:
+generalize them for a training-data pipeline. Every function takes the
+text of a column or expression and returns Spark SQL text (codegen; no
+UDFs) for ``F.expr``/``selectExpr``: one string costs a few py4j round
+trips however large it is, where each Column call costs about twelve.
+Each has an exactly matching DuckDB fragment (``*_SQL``) used by the
+oracle gate — the cross-engine determinism rules are:
 
 - token hashes via md5 prefix → 32-bit int (identical md5 both sides),
 - rolling fingerprint folded left mod a < 2^50 prime (no int64
@@ -16,8 +18,7 @@ the cross-engine determinism rules are:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # < 2^50 prime: acc·31 + h stays < 2^63 (ANSI-safe)
 FP_MOD = 1125899906842597
@@ -32,32 +33,34 @@ LANG_MARKERS: dict[str, list[str]] = {
 LANG_ORDER = ["en", "de", "es"]
 
 
-def tokens(text: Column) -> Column:
+def tokens(text: str) -> str:
     """Whitespace tokens, empties dropped (split parity with DuckDB's
     string_split + list_filter)."""
-    return F.filter(F.split(text, " "), lambda t: t != "")
+    return f"filter(split({text}, ' '), t -> t != '')"
 
 
 def TOKENS_SQL(text: str) -> str:
     return f"list_filter(string_split({text}, ' '), t -> t != '')"
 
 
-def tokens_expr(text: str) -> str:
-    """Spark SQL text of ``tokens`` over the column or expression
-    ``text``. One ``F.expr``/``selectExpr`` string costs a few py4j
-    round trips, where each Column call costs about twelve."""
-    return f"filter(split({text}, ' '), t -> t != '')"
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
+def token_count(text: str) -> str:
+    return f"size({tokens(text)})"
 
 
 def TOKEN_COUNT_SQL(text: str) -> str:
     return f"len({TOKENS_SQL(text)})"
 
 
-def token_hash(tok: Column) -> Column:
+def _md5_hex_long(tok: str, start: int) -> str:
+    """The 8 md5 hex chars of ``tok`` from ``start`` as a BIGINT, 0 for
+    a null ``tok``."""
+    return (
+        f"coalesce(CAST(conv(substring(md5({tok}), {start}, 8), 16, 10) AS BIGINT), "
+        "CAST(0 AS BIGINT))"
+    )
+
+
+def token_hash(tok: str) -> str:
     """32-bit token hash from the md5 hex prefix — engine-portable.
     coalesce marks the hash NON-NULLABLE (it never is for the non-null
     tokens every caller feeds it): as an equi-join key — the shingle
@@ -71,48 +74,31 @@ def token_hash(tok: Column) -> Column:
     elements of ``tokens()``, ``bpe_tokens()`` or shingles built from
     them, and neither a split nor a regex match list has a null element
     (a null text gives a null array, which yields no tokens)."""
-    return F.coalesce(
-        F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long"),
-        F.lit(0).cast("long"),
-    )
+    return _md5_hex_long(tok, 1)
 
 
 def TOKEN_HASH_SQL(tok: str) -> str:
     return f"CAST(('0x' || substr(md5({tok}), 1, 8)) AS BIGINT)"
 
 
-def token_hash_expr(tok: str) -> str:
-    """Spark SQL text of ``token_hash`` (same expression tree, same
-    null contract), for callers that build a whole projection as one
-    string."""
-    return (
-        f"coalesce(CAST(conv(substring(md5({tok}), 1, 8), 16, 10) AS BIGINT), "
-        "CAST(0 AS BIGINT))"
-    )
-
-
-def token_hash_hi(tok: Column) -> Column:
+def token_hash_hi(tok: str) -> str:
     """Second independent 32-bit token hash (md5 hex chars 9-16) —
     paired with token_hash to give 64 independent bits per token for
     the 64-bit SimHash family. Non-nullable for the same join-key
     reason as token_hash, with the same null → 0 contract."""
-    return F.coalesce(
-        F.conv(F.substring(F.md5(tok), 9, 8), 16, 10).cast("long"),
-        F.lit(0).cast("long"),
-    )
+    return _md5_hex_long(tok, 9)
 
 
 def TOKEN_HASH_HI_SQL(tok: str) -> str:
     return f"CAST(('0x' || substr(md5({tok}), 9, 8)) AS BIGINT)"
 
 
-def fingerprint(text: Column) -> Column:
+def fingerprint(text: str) -> str:
     """Rolling polynomial document fingerprint: left fold of token
     hashes, acc·31 + h (mod FP_MOD)."""
-    return F.aggregate(
-        tokens(text),
-        F.lit(0).cast("long"),
-        lambda acc, t: F.pmod(acc * F.lit(31) + token_hash(t), F.lit(FP_MOD)),
+    return (
+        f"aggregate({tokens(text)}, CAST(0 AS BIGINT), "
+        f"(acc, t) -> pmod(acc * 31 + {token_hash('t')}, {FP_MOD}))"
     )
 
 
@@ -124,20 +110,19 @@ def FINGERPRINT_SQL(text: str) -> str:
     )
 
 
-def punct_count(text: Column) -> Column:
+def punct_count(text: str) -> str:
     """Punctuation chars, via length-difference (regexp parity trick:
     identical semantics in Spark and DuckDB 'g'-flag replace)."""
-    return F.length(text) - F.length(F.regexp_replace(text, PUNCT_RE, ""))
+    return f"(length({text}) - length(regexp_replace({text}, '{PUNCT_RE}', '')))"
 
 
 def PUNCT_COUNT_SQL(text: str) -> str:
     return f"(length({text}) - length(regexp_replace({text}, '{PUNCT_RE}', '', 'g')))"
 
 
-def marker_count(text: Column, lang: str) -> Column:
-    words = LANG_MARKERS[lang]
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(arr, t)))
+def marker_count(text: str, lang: str) -> str:
+    words = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
+    return f"size(filter({tokens(text)}, t -> array_contains(array({words}), t)))"
 
 
 def MARKER_COUNT_SQL(text: str, lang: str) -> str:
@@ -145,15 +130,15 @@ def MARKER_COUNT_SQL(text: str, lang: str) -> str:
     return f"len(list_filter({TOKENS_SQL(text)}, t -> list_contains([{words}], t)))"
 
 
-def lang_id(text: Column) -> Column:
+def lang_id(text: str) -> str:
     """Heuristic language ID: marker-word argmax, priority-ordered tie
     break, 'und' (undetermined) when no marker hits."""
-    counts = {lg: marker_count(text, lg) for lg in LANG_ORDER}
-    best = F.greatest(*counts.values())
-    expr = F.lit("und")
+    cnt = {lg: marker_count(text, lg) for lg in LANG_ORDER}
+    best = f"greatest({', '.join(cnt.values())})"
+    sql = "'und'"
     for lg in reversed(LANG_ORDER):
-        expr = F.when((counts[lg] == best) & (best > 0), F.lit(lg)).otherwise(expr)
-    return expr
+        sql = f"CASE WHEN {cnt[lg]} = {best} AND {best} > 0 THEN '{lg}' ELSE {sql} END"
+    return sql
 
 
 def LANG_ID_SQL(text: str) -> str:
@@ -165,19 +150,17 @@ def LANG_ID_SQL(text: str) -> str:
     return sql
 
 
-def quality_features(text: Column) -> dict[str, Column]:
+def quality_features(text: str) -> dict[str, str]:
     """Quality-scoring features, all integer/quantized (oracle-exact):
     n_chars, n_tokens, avg token length ×1000, punctuation ratio
     ×10000, stopword(en-marker) ratio ×10000."""
     n_tok = token_count(text)
-    n_chr = F.length(text)
-    safe_tok = F.greatest(n_tok, F.lit(1))
     return {
-        "n_chars": n_chr.cast("long"),
-        "n_tokens": n_tok.cast("long"),
-        "avg_tok_len_q": F.floor(n_chr / safe_tok * 1000),
-        "punct_ratio_q": F.floor(punct_count(text) * 10000 / F.greatest(n_chr, F.lit(1))),
-        "stop_ratio_q": F.floor(marker_count(text, "en") * 10000 / safe_tok),
+        "n_chars": f"CAST(length({text}) AS BIGINT)",
+        "n_tokens": f"CAST({n_tok} AS BIGINT)",
+        "avg_tok_len_q": f"floor(length({text}) / greatest({n_tok}, 1) * 1000)",
+        "punct_ratio_q": f"floor({punct_count(text)} * 10000 / greatest(length({text}), 1))",
+        "stop_ratio_q": f"floor({marker_count(text, 'en')} * 10000 / greatest({n_tok}, 1))",
     }
 
 
@@ -193,12 +176,12 @@ def QUALITY_FEATURES_SQL(text: str) -> dict[str, str]:
 
 
 def pack_contiguous(
-    docs,
+    docs: DataFrame,
     target_tokens: int = 2048,
     n_shards: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
-):
+) -> DataFrame:
     """Context-window token packing (training-data pipeline): assign
     each document to a fixed-budget bin by the running token prefix of
     its shard — ``bin = floor(prefix_before / target)`` — so bins fill
@@ -209,20 +192,18 @@ def pack_contiguous(
     the 100 TB shape (one shuffle, bounded partitions). Deterministic:
     order within shard is the id. Returns (doc_id, shard, n_tokens,
     bin_id)."""
-    from pyspark.sql import DataFrame, Window  # noqa: F401
-
-    d = docs.select(
-        F.col(id_col),
-        F.pmod(F.col(id_col), F.lit(n_shards)).alias("shard"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
+    d = docs.selectExpr(
+        id_col,
+        f"pmod({id_col}, {n_shards}) AS shard",
+        f"CAST({token_count(text_col)} AS BIGINT) AS n_tokens",
     )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    prefix = (
+        f"sum(n_tokens) OVER (PARTITION BY shard ORDER BY {id_col} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
-    prefix = F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("long"))
-    return d.withColumn("bin_id", F.floor(prefix / F.lit(target_tokens)))
+    return d.selectExpr(
+        "*", f"floor(coalesce({prefix}, CAST(0 AS BIGINT)) / {target_tokens}) AS bin_id"
+    )
 
 
 def PACK_CONTIGUOUS_SQL(
@@ -255,9 +236,12 @@ def PACK_CONTIGUOUS_SQL(
 BPE_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
 
 
-def bpe_tokens(text: Column) -> Column:
-    """array<string> of BPE-ish subword tokens (whole-match group 0)."""
-    return F.regexp_extract_all(text, F.lit(BPE_PATTERN), F.lit(0))
+def bpe_tokens(text: str) -> str:
+    """array<string> of BPE-ish subword tokens (whole-match group 0).
+    Spark unescapes backslashes in SQL string literals, so the
+    pattern's are doubled."""
+    pattern = BPE_PATTERN.replace("\\", "\\\\")
+    return f"regexp_extract_all({text}, '{pattern}', 0)"
 
 
 def BPE_TOKENS_SQL(text: str) -> str:

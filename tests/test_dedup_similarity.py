@@ -96,21 +96,13 @@ def test_simhash_exact_copies_have_zero_hamming(spark, docs):
 
 
 def test_simhash_scalar_set_and_oracle_parity(spark, docs):
-    """The three SimHash formulations must agree bit-for-bit: the
-    definitional column expression (simhash), the codegen'd production
-    path (simhash_sigs), DuckDB's scalar twin (SIMHASH_SQL) and its
-    set-based twin (SIMHASH_SIGS_SQL). Pins the 64-bit layout incl.
-    the two's-complement top bit across engines."""
+    """The production path (simhash_sigs), DuckDB's scalar SimHash
+    (SIMHASH_SQL) and its set-based twin (SIMHASH_SIGS_SQL) must agree
+    bit-for-bit. Pins the 64-bit layout incl. the two's-complement top
+    bit across engines."""
     import duckdb
 
-    expr = {
-        r.id: r.sig
-        for r in docs.select(
-            F.col("doc_id").alias("id"), dedup.simhash(F.col("text")).alias("sig")
-        ).collect()
-    }
     sigs = {r.id: r.sig for r in dedup.simhash_sigs(docs).collect()}
-    assert expr == sigs
     # at least one doc must exercise the sign bit, else the top-weight
     # path is untested
     assert any(v < 0 for v in sigs.values())
@@ -128,6 +120,39 @@ def test_simhash_scalar_set_and_oracle_parity(spark, docs):
         for i, s in con.execute(dedup.SIMHASH_SIGS_SQL()).fetchall()
     }
     assert scalar == sigs and setb == sigs
+
+
+def test_tokenless_texts_pair_with_nothing_in_either_engine(spark):
+    """A text with no token (null, empty or blank) has no shingles, so
+    it pairs with no document, in Spark as in DuckDB. Unguarded, Spark
+    gives each such text the shingle '' (size(null) = -1 and concat_ws
+    of a null or empty slice is ''), pairing them all with each other."""
+    import duckdb
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(range(10)),
+            "text": [None, None, None, None, "", "", "  ",
+                     "the quick brown fox jumps", "the quick brown fox jumps",
+                     "a quite unrelated sentence here"],
+        }
+    )
+    docs = spark.createDataFrame(pdf, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pdf)
+
+    def pairs(rows):
+        return sorted((int(a), int(b), int(j)) for a, b, j in rows)
+
+    want = [(7, 8, 1000000)]
+    assert pairs(con.execute(dedup.NGRAM_JACCARD_SQL()).fetchall()) == want
+    assert pairs(con.execute(dedup.MINHASH_LSH_SQL()).fetchall()) == want
+    assert pairs(dedup.ngram_jaccard_pairs(docs).collect()) == want
+    assert pairs(dedup.minhash_lsh_pairs(docs).collect()) == want
+    clusters = dedup.dedup_clusters(docs.select("doc_id"), dedup.minhash_lsh_pairs(docs))
+    got = {r.doc_id: r.cluster_id for r in clusters.collect()}
+    assert got == dict(con.execute(dedup.DEDUP_CLUSTERS_SQL(dedup.MINHASH_LSH_SQL())).fetchall())
+    assert got == {i: 7 if i == 8 else i for i in range(10)}
 
 
 def test_simhash_band_collisions_stay_linear_on_random_corpus(spark):

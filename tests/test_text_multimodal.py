@@ -25,38 +25,62 @@ def test_lang_id_markers(spark):
             }
         )
     )
-    out = {r.doc_id: r.lang for r in df.select("doc_id", text.lang_id(F.col("text")).alias("lang")).collect()}
+    out = {r.doc_id: r.lang for r in df.select("doc_id", F.expr(text.lang_id("text")).alias("lang")).collect()}
     assert out == {1: "en", 2: "de", 3: "es", 4: "und"}
 
 
 def test_fingerprint_properties(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"t": ["a b c", "a b c", "a  b   c", "c b a", ""]})
-    ).select(text.fingerprint(F.col("t")).alias("fp"))
+    ).select(F.expr(text.fingerprint("t")).alias("fp"))
     fps = [r.fp for r in df.collect()]
     assert fps[0] == fps[1] == fps[2]  # whitespace-insensitive, stable
     assert fps[0] != fps[3]  # order-sensitive (rolling)
     assert fps[4] == 0  # empty doc
 
 
-def test_sql_text_twins_equal_the_column_forms(spark):
-    """tokens_expr/token_hash_expr (one selectExpr string) and
-    tokens/token_hash (Column calls) are the same expressions."""
-    df = spark.createDataFrame(pd.DataFrame({"t": ["the cat  hat ", "", "  ", "straße 旧市街 0"]}))
-    got = df.select(
-        text.tokens(F.col("t")).alias("a"),
-        F.expr(text.tokens_expr("t")).alias("b"),
-        F.transform(text.tokens(F.col("t")), text.token_hash).alias("c"),
-        F.expr(f"transform({text.tokens_expr('t')}, w -> {text.token_hash_expr('w')})").alias("d"),
-    ).collect()
-    assert [(r.a, r.c) for r in got] == [(r.b, r.d) for r in got]
-    assert any(r.c for r in got)
+def test_text_functions_match_their_duckdb_twins_on_edge_strings(spark):
+    """Each Spark text function gives its DuckDB ``*_SQL`` twin's value
+    on doubled, leading, trailing and whitespace-only spacing, the
+    empty string, non-ASCII letters and digits, and punctuation."""
+    import duckdb
+
+    strings = ["the cat  hat ", "", "  ", "straße 旧市街 0", "Hello, world! It's 3 o'clock."]
+    pdf = pd.DataFrame({"i": range(len(strings)), "t": strings})
+    feats = {n: f"CAST({e} AS BIGINT)" for n, e in text.quality_features("t").items()}
+    feats_sql = {n: f"CAST({e} AS BIGINT)" for n, e in text.QUALITY_FEATURES_SQL("t").items()}
+    spark_cols = {
+        "toks": text.tokens("t"),
+        "fp": text.fingerprint("t"),
+        "lang": text.lang_id("t"),
+        "bpe": text.bpe_tokens("t"),
+        **feats,
+    }
+    duck_cols = {
+        "toks": text.TOKENS_SQL("t"),
+        "fp": text.FINGERPRINT_SQL("t"),
+        "lang": text.LANG_ID_SQL("t"),
+        "bpe": text.BPE_TOKENS_SQL("t"),
+        **feats_sql,
+    }
+    names = list(spark_cols)
+    got = spark.createDataFrame(pdf).selectExpr(
+        "i", *[f"{spark_cols[n]} AS {n}" for n in names]
+    ).orderBy("i").collect()
+    con = duckdb.connect()
+    con.register("docs", pdf)
+    want = con.execute(
+        f"SELECT i, {', '.join(f'{duck_cols[n]} AS {n}' for n in names)} FROM docs ORDER BY i"
+    ).fetchall()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert [r.toks for r in got][3] == ["straße", "旧市街", "0"]
+    assert any(r.fp for r in got) and any(r.punct_ratio_q for r in got)
 
 
 def test_token_and_quality_features(spark):
     df = spark.createDataFrame(pd.DataFrame({"t": ["the cat, the hat!  "]}))
-    feats = text.quality_features(F.col("t"))
-    row = df.select(*[c.alias(n) for n, c in feats.items()]).collect()[0]
+    feats = text.quality_features("t")
+    row = df.selectExpr(*[f"{e} AS {n}" for n, e in feats.items()]).collect()[0]
     assert row.n_tokens == 4
     assert row.punct_ratio_q > 0
     assert row.stop_ratio_q == 5000  # 2 of 4 tokens are 'the'

@@ -244,7 +244,7 @@ def ensure_scaled_inputs(sf_dir: str, factor: int = SCALE_FACTOR) -> str:
 
     from changesetmd_spark.session import get_spark
 
-    spark = get_spark(app_name="scale_inputs", master="local[8]")
+    spark = get_spark(app_name="scale_inputs")
     spark.sparkContext.setLogLevel("ERROR")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     stride = 10_000_000  # > any sf<=1 orderkey; shifted copies never collide
